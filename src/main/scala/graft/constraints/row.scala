@@ -9,6 +9,8 @@ import types.ToleranceGetter
 /** Row-set constraints (reference `constraints/row.py:13-222`). All operate
   * on SET semantics (EXCEPT DISTINCT / DISTINCT UNION), with a
   * `maxMissingFraction` tolerance possibly derived from date-range growth.
+  * Equality/subset/superset read every set size and sample from one fused
+  * aggregation (`Ops.getRowSets`).
   */
 sealed abstract class RowConstraint extends Constraint {
   def ref2Required: DataRef
@@ -24,17 +26,13 @@ final case class RowEquality(
     override val nameOverride: Option[String] = None)
     extends RowConstraint {
   override def test(spark: SparkSession): TestResult = withPlans {
-    val maxMissing   = maxMissingFractionGetter(spark)
-    val missingLeft  = Ops.getRowDifferenceCount(spark, ref, ref2Required)
-    val missingRight = Ops.getRowDifferenceCount(spark, ref2Required, ref)
-    val total        = Ops.getUniqueCountUnion(spark, ref, ref2Required)
-    if (total == 0) return TestResult.success(description)
-    val fraction = (missingLeft + missingRight).toDouble / total
+    val maxMissing = maxMissingFractionGetter(spark)
+    val sets       = Ops.getRowSets(spark, ref, ref2Required)
+    if (sets.union == 0) return TestResult.success(description)
+    val fraction = (sets.leftOnly + sets.rightOnly).toDouble / sets.union
     if (fraction <= maxMissing) TestResult.success(description)
     else {
-      val sample =
-        if (missingLeft > 0) Ops.getRowDifferenceSample(spark, ref, ref2Required)
-        else Ops.getRowDifferenceSample(spark, ref2Required, ref)
+      val sample = if (sets.leftOnly > 0) sets.leftOnlySample else sets.rightOnlySample
       TestResult.failure(
         description,
         s"$fraction > $maxMissing of rows differ between ${ref.describe} and " +
@@ -52,19 +50,16 @@ final case class RowSubset(
     extends RowConstraint {
   override def test(spark: SparkSession): TestResult = withPlans {
     val maxMissing = maxMissingFractionGetter(spark)
-    val missing    = Ops.getRowDifferenceCount(spark, ref, ref2Required)
-    val total      = Ops.getUniqueCount(spark, ref)
-    if (total == 0) return TestResult.success(description)
-    val fraction = missing.toDouble / total
+    val sets       = Ops.getRowSets(spark, ref, ref2Required)
+    if (sets.left == 0) return TestResult.success(description)
+    val fraction = sets.leftOnly.toDouble / sets.left
     if (fraction <= maxMissing) TestResult.success(description)
-    else {
-      val sample = Ops.getRowDifferenceSample(spark, ref, ref2Required)
+    else
       TestResult.failure(
         description,
         s"$fraction > $maxMissing of rows of ${ref.describe} are not in " +
-          s"${ref2Required.describe}. E.g. for ${formatting.formatSample(sample)}. " +
+          s"${ref2Required.describe}. E.g. for ${formatting.formatSample(sets.leftOnlySample)}. " +
           conditionString)
-    }
   }
 }
 
@@ -77,19 +72,16 @@ final case class RowSuperset(
     extends RowConstraint {
   override def test(spark: SparkSession): TestResult = withPlans {
     val maxMissing = maxMissingFractionGetter(spark)
-    val missing    = Ops.getRowDifferenceCount(spark, ref2Required, ref)
-    val total      = Ops.getUniqueCount(spark, ref2Required)
-    if (total == 0) return TestResult.success(description)
-    val fraction = missing.toDouble / total
+    val sets       = Ops.getRowSets(spark, ref, ref2Required)
+    if (sets.right == 0) return TestResult.success(description)
+    val fraction = sets.rightOnly.toDouble / sets.right
     if (fraction <= maxMissing) TestResult.success(description)
-    else {
-      val sample = Ops.getRowDifferenceSample(spark, ref2Required, ref)
+    else
       TestResult.failure(
         description,
         s"$fraction > $maxMissing of rows of ${ref2Required.describe} are not in " +
-          s"${ref.describe}. E.g. for ${formatting.formatSample(sample)}. " +
+          s"${ref.describe}. E.g. for ${formatting.formatSample(sets.rightOnlySample)}. " +
           conditionString)
-    }
   }
 }
 

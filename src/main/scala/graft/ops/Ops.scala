@@ -252,12 +252,58 @@ object Ops {
   def getColumnType(spark: SparkSession, ref: DataRef): DataType =
     ref.selection(spark).schema.head.dataType
 
-  /** First row of sel1 EXCEPT sel2 (reference `db_access.py:1016-1024`).
-    * Spark `except` is EXCEPT DISTINCT, matching reference semantics
-    * (`requirements.py:2092-2095`).
+  /** Distinct-row set sizes of two selections plus one sample row of each
+    * difference: |L∖R|, |R∖L|, |L|, |R|, |L∪R|. */
+  final case class RowSets(
+      leftOnly: Long,
+      rightOnly: Long,
+      left: Long,
+      right: Long,
+      union: Long,
+      leftOnlySample: Option[Row],
+      rightOnlySample: Option[Row])
+
+  /** Every row-set quantity of two selections in one aggregation — the
+    * fused form of two EXCEPT counts (reference `db_access.py:1027-1041`),
+    * two distinct counts, the DISTINCT UNION count (`db_access.py:952-964`)
+    * and the difference samples (`db_access.py:1016-1024`). Both sides are
+    * renamed positionally and tagged, unioned (by position, so
+    * WidenSetOperationTypes coerces as for EXCEPT), grouped on every column
+    * (NULLs group as equal, NaN and -0.0 normalized — EXCEPT DISTINCT's set
+    * semantics), and one global aggregate counts the side-flag combinations.
+    * Samples are cast back to their own side's column types and names.
     */
-  def getRowDifferenceSample(spark: SparkSession, ref: DataRef, ref2: DataRef): Option[Row] =
-    ref.selection(spark).except(ref2.selection(spark)).head(1).headOption
+  def getRowSets(spark: SparkSession, ref: DataRef, ref2: DataRef): RowSets = {
+    val l = ref.selection(spark)
+    val r = ref2.selection(spark)
+    def tagged(df: DataFrame, isLeft: Boolean) =
+      df.toDF(df.columns.indices.map(i => s"_dj$i"): _*)
+        .withColumn("_dj_l", lit(isLeft))
+        .withColumn("_dj_r", lit(!isLeft))
+    val cols = l.columns.indices.map(i => s"_dj$i")
+    val inL = col("_dj_l")
+    val inR = col("_dj_r")
+    def sample(side: DataFrame, only: Column) =
+      first(when(only, struct(cols.zip(side.schema.fields).map { case (c, f) =>
+        col(c).cast(f.dataType).as(f.name)
+      }: _*)), ignoreNulls = true)
+    val row = tagged(l, isLeft = true)
+      .union(tagged(r, isLeft = false))
+      .groupBy(cols.map(col): _*)
+      .agg(max(inL).as("_dj_l"), max(inR).as("_dj_r"))
+      .agg(
+        count(when(inL && !inR, 1)),
+        count(when(inR && !inL, 1)),
+        count(when(inL, 1)),
+        count(when(inR, 1)),
+        count(lit(1)),
+        sample(l, inL && !inR),
+        sample(r, inR && !inL))
+      .head()
+    RowSets(
+      row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3), row.getLong(4),
+      Option(row.getStruct(5)), Option(row.getStruct(6)))
+  }
 
   /** |sel1 EXCEPT sel2| (already distinct; reference `db_access.py:1027-1041`). */
   def getRowDifferenceCount(spark: SparkSession, ref: DataRef, ref2: DataRef): Long =

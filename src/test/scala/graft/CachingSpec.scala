@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{DataRef, FrameSource}
@@ -19,22 +16,9 @@ class CachingSpec extends AnyFunSuite {
     val df = intDf("cache_t", (1 to 19).map(Integer.valueOf))
     val c  = NRowsEquality(DataRef(FrameSource(df, "cache_t")), refValue = Some(19L))
 
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      c.test(spark)
-      Thread.sleep(500)
-      val afterFirst = jobs.get()
-      assert(afterFirst >= 1, "first test() should run at least one job")
-      (1 to 5).foreach(_ => assert(c.test(spark).outcome))
-      Thread.sleep(500)
-      assert(jobs.get() == afterFirst,
-        s"repeated test() launched ${jobs.get() - afterFirst} extra job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(countJobs(c.test(spark)) >= 1, "first test() should run at least one job")
+    val repeats = countJobs((1 to 5).foreach(_ => assert(c.test(spark).outcome)))
+    assert(repeats == 0, s"repeated test() launched $repeats extra job(s)")
   }
 
   test("cacheSize=0 disables memoization: every test() re-queries") {
@@ -46,22 +30,10 @@ class CachingSpec extends AnyFunSuite {
       Seq("col_varchar"), uniques = (1 to 25).map(i => s"v$i"), cacheSize = Some(0))
     val constraint = req.constraints.head
 
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      constraint.test(spark)
-      Thread.sleep(500)
-      val afterFirst = jobs.get()
-      assert(afterFirst >= 1)
-      (1 to 5).foreach(_ => assert(constraint.test(spark).outcome))
-      Thread.sleep(500)
-      assert(jobs.get() >= afterFirst + 5,
-        s"cache-off should re-run jobs: first=$afterFirst total=${jobs.get()}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val first = countJobs(constraint.test(spark))
+    assert(first >= 1)
+    val repeats = countJobs((1 to 5).foreach(_ => assert(constraint.test(spark).outcome)))
+    assert(repeats >= 5, s"cache-off should re-run jobs: first=$first repeats=$repeats")
   }
 
   test("Uniqueness multi-retrieval: exact job-count parity, default vs cacheSize=0") {
@@ -72,17 +44,6 @@ class CachingSpec extends AnyFunSuite {
     import graft.constraints.Uniqueness
     val df = intDf("uniq_jobs_t", (1 to 40).map(i => Integer.valueOf(i % 25)))
     val r = DataRef(FrameSource(df, "uniq_jobs_t"), Some(Seq("col_int")))
-
-    def countJobs(body: => Unit): Int = {
-      val jobs = new AtomicInteger(0)
-      val listener = new SparkListener {
-        override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try { body; Thread.sleep(500); jobs.get() }
-      finally spark.sparkContext.removeSparkListener(listener)
-    }
 
     val cached = Uniqueness(r, maxDuplicateFraction = 0.9)
     val uncached = Uniqueness(r, maxDuplicateFraction = 0.9, cacheSize = Some(0))
@@ -104,20 +65,9 @@ class CachingSpec extends AnyFunSuite {
 
   test("a fresh constraint instance re-queries (cache is per instance)") {
     val df = intDf("cache_t2", (1 to 19).map(Integer.valueOf))
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      NRowsEquality(DataRef(FrameSource(df, "cache_t2")), refValue = Some(19L)).test(spark)
-      Thread.sleep(500)
-      val first = jobs.get()
-      NRowsEquality(DataRef(FrameSource(df, "cache_t2")), refValue = Some(19L)).test(spark)
-      Thread.sleep(500)
-      assert(jobs.get() > first)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    def fresh = NRowsEquality(DataRef(FrameSource(df, "cache_t2")), refValue = Some(19L))
+    fresh.test(spark)
+    assert(countJobs(fresh.test(spark)) > 0)
   }
 }
 
@@ -142,26 +92,16 @@ class ApproxSpec extends org.scalatest.funsuite.AnyFunSuite {
     val r  = DataRef(FrameSource(df, "jobs_p"), Some(Seq("col_int")))
     // warm once: first call JIT-compiles the kernels and registers the view
     Ops.getPercentile(spark, r, 25.0)
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      assert(Ops.getPercentile(spark, r, 50.0) == 1000.0)
-      Thread.sleep(500)
-      // the round-4 shape re-scanned the base selection 4× (counts groupBy
-      // feeding CumSum's boundary job, its bucket-totals collect, a separate
-      // total agg, and the final min); now the checkpoint job is the ONLY
-      // base scan and every downstream pass reads the |distinct|-sized
-      // frame. Under AQE each materialized shuffle stage is its own job, so
-      // the call decomposes into 9 small jobs (measured; deterministic for
-      // a fixed plan) — a regression back to per-pass base rescans adds
-      // its scan+shuffle stages on top and fails this pin loudly.
-      assert(jobs.get() <= 9,
-        s"getPercentile launched ${jobs.get()} jobs, expected <= 9")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = countJobs(assert(Ops.getPercentile(spark, r, 50.0) == 1000.0))
+    // the round-4 shape re-scanned the base selection 4× (counts groupBy
+    // feeding CumSum's boundary job, its bucket-totals collect, a separate
+    // total agg, and the final min); now the checkpoint job is the ONLY
+    // base scan and every downstream pass reads the |distinct|-sized
+    // frame. Under AQE each materialized shuffle stage is its own job, so
+    // the call decomposes into 9 small jobs (measured; deterministic for
+    // a fixed plan) — a regression back to per-pass base rescans adds
+    // its scan+shuffle stages on top and fails this pin loudly.
+    assert(jobs <= 9, s"getPercentile launched $jobs jobs, expected <= 9")
   }
 
   test("approx percentile close to exact on 1..2000") {

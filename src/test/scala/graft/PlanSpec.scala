@@ -542,23 +542,9 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("embeddingNearDupsAuto: bit-identical to the counted spelling, no extra scan job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val vectors = spark.read.parquet(s"$dir/embeddings.parquet")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    def countJobs(body: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new SparkListener {
-        override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-          jobs.incrementAndGet(): Unit
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        body
-        Thread.sleep(500) // listener bus drains asynchronously
-      } finally spark.sparkContext.removeSparkListener(listener)
-      jobs.get()
-    }
     var auto: Set[(Long, Long)] = null
     var manual: Set[(Long, Long)] = null
     // the r10 gate spelling: an external count() scan just to size the key
