@@ -1217,13 +1217,15 @@ object SparkEntry {
 
     // windowed event-stream quality profile (batch flavor of
     // streaming.StreamingChecks.windowedProfile; same plan shape Structured
-    // Streaming runs incrementally with a watermark)
+    // Streaming runs incrementally with a watermark). The mean accumulates
+    // in decimal on both sides: a double sum's last ulp depends on
+    // summation order and can cross the 6-decimal rounding half.
     "q_events_profile" -> { (s, dir) =>
       readEvents(s, dir)
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(
           count(lit(1)).as("n_events"),
-          round(avg(col("value")), 6).as("avg_value"),
+          round(avg(col("value").cast("decimal(38,9)")), 6).cast("double").as("avg_value"),
           count(when(col("value").isNull, 1)).as("n_null"))
         .select(
           col("w.start").cast("string").as("window_start"),
@@ -5684,7 +5686,7 @@ object SparkEntry {
     "q_events_profile" ->
       """SELECT cast(time_bucket(INTERVAL 1 HOUR, ts) AS VARCHAR) AS window_start,
                 event_type, count(*) AS n_events,
-                round(avg(value), 6) AS avg_value,
+                round(avg(CAST(value AS DECIMAL(38,9))), 6) AS avg_value,
                 count(*) FILTER (WHERE value IS NULL) AS n_null
          FROM events GROUP BY 1, 2""",
     "q_asof_join" ->

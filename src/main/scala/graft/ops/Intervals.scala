@@ -14,7 +14,7 @@ import graft.core.DataRef
   *     range predicate as a residual filter — Spark executes a shuffled hash
   *     join on keys, never a cartesian product (as long as keys are given).
   *   - Gap detection windows are partitioned BY KEY (`partitionBy(keys)
-  *     .orderBy(start)`) — no global sort; each key group sorts locally.
+  *     .orderBy(coord, tag)`) — no global sort; each key group sorts locally.
   *     The reference's global `row_number` ordering is an artifact of its
   *     SQL backends; per-key ranking is the intended semantic and the
   *     scalable plan.
@@ -752,6 +752,18 @@ object Intervals {
     keyed.distinct().count()
   }
 
+  /** The gap check's key columns: the given ones, or — when none are given —
+    * every selected column other than start and end (reference
+    * `db_access.py:523-529`). Empty means one global timeline.
+    */
+  private def gapKeys(
+      sel: DataFrame,
+      keyColumns: Seq[String],
+      startColumn: String,
+      endColumn: String): Seq[String] =
+    if (keyColumns.nonEmpty) keyColumns
+    else sel.columns.toSeq.filterNot(c => c == startColumn || c == endColumn)
+
   /** Interval-gap violations (reference `_get_interval_gaps`,
     * `db_access.py:499-596`, inspired by the classic ranges-gaps SQL).
     *
@@ -769,96 +781,12 @@ object Intervals {
       endColumn: String,
       gapCondition: (Column, Column) => Column): DataFrame = {
     val sel = ref.selection(spark)
-    val keyColumns =
-      if (keyColumnsIn.nonEmpty) keyColumnsIn
-      else sel.columns.toSeq.filterNot(c => c == startColumn || c == endColumn)
-
-    /** NOT EXISTS: the point is not strictly inside any interval of the
-      * same key group (reference `db_access.py:475-496`), as a union-tag
-      * SWEEP instead of an anti-join. The SMJ anti-join is per-key-group
-      * QUADRATIC (every point rescans its group's interval buffer — 3.3 s
-      * of the 3.5 s q_numeric_gaps total at sf0.1, and a scale-killer for
-      * large key groups at 100 TB). Equivalent O(n log n) form: union
-      * interval events (coord = start, carrying end) with probe rows
-      * (coord = point), sort by (coord, tag) with probes BEFORE events at
-      * equal coord, and take a running max of interval ends — a probe is
-      * strictly inside some other interval iff that running max exceeds
-      * it. The tie-break preserves the reference's strict `point > start`:
-      * an interval starting AT the probe's coordinate sorts after it and
-      * never counts. Strictness also makes self-exclusion automatic,
-      * exactly like the anti-join condition it replaces.
-      *
-      * Keyed: one window per key group. Keyless (global timeline): the
-      * same sweep through `CumSum.withRunningMax`'s range-bucket scheme —
-      * per-bucket windows plus a driver-side prefix-max carry — so there
-      * is still no unpartitioned window (equal coords land in one bucket
-      * by construction, which keeps the tie-break local).
-      *
-      * NULL semantics match the anti-join: a NULL-coordinate probe never
-      * matches (strict compares yield NULL) → kept via the coalesce;
-      * NULL-start intervals never contain anything → filtered out of the
-      * event side; NULL ends are ignored by max() natively.
-      */
-    def notInOtherInterval(table: DataFrame, pointCol: String): DataFrame = {
-      val probes = table
-        .withColumn("dj_coord", col(pointCol))
-        .withColumn("dj_end", lit(null).cast(sel.schema(endColumn).dataType))
-        .withColumn("dj_is_iv", lit(0))
-      val events = sel
-        .select(
-          keyColumns.map(col) :+
-            col(startColumn).as("dj_coord") :+
-            col(endColumn).as("dj_end"): _*)
-        .where(col("dj_coord").isNotNull)
-        .withColumn("dj_is_iv", lit(1))
-      val union = probes.unionByName(events, allowMissingColumns = true)
-      val swept =
-        if (keyColumns.nonEmpty) {
-          val w = Window
-            .partitionBy(keyColumns.map(col): _*)
-            .orderBy(col("dj_coord"), col("dj_is_iv"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-          union.withColumn("dj_runmax", max(col("dj_end")).over(w))
-        } else {
-          CumSum.withRunningMax(
-            union, "dj_coord", Seq("dj_is_iv"), "dj_end", "dj_runmax")
-        }
-      swept
-        .where(
-          col("dj_is_iv") === 0 &&
-            coalesce(!(col("dj_runmax") > col("dj_coord")), lit(true)))
-        .drop("dj_coord", "dj_end", "dj_is_iv", "dj_runmax")
-    }
-
-    // Classic per-column ranges-gaps plan, kept deliberately after a fused
-    // union-tag variant was measured and rejected both ways: adjacency
-    // pairing (one lead() window, no rank join) is NOT the reference's
-    // semantics once duplicate boundary points shift the rank alignment
-    // (see IntervalSpec's duplicate-boundary truth tables), and the
-    // faithful rank-pairing fusion duplicates the whole anti-join subtree
-    // per join branch (column pruning specializes each branch's window
-    // expression list, so the subtrees stop being identical and exchange
-    // reuse cannot fire) -- costing more than these two per-column chains.
-    if (keyColumns.nonEmpty) {
-      val wStart = Window.partitionBy(keyColumns.map(col): _*).orderBy(col(startColumn))
-      val wEnd   = Window.partitionBy(keyColumns.map(col): _*).orderBy(col(endColumn))
-      val startTable = notInOtherInterval(sel, startColumn)
-        .select(
-          keyColumns.map(col) :+
-            col(startColumn) :+
-            row_number().over(wStart).as("dj_start_rank"): _*)
-      val endTable = notInOtherInterval(sel, endColumn)
-        .select(
-          keyColumns.map(c => col(c).as(c + "_e")) :+
-            col(endColumn) :+
-            row_number().over(wEnd).as("dj_end_rank"): _*)
-      val joinCond = keyColumns.map(k => col(k) === col(k + "_e")).reduce(_ && _) &&
-        col("dj_start_rank") === col("dj_end_rank") + 1 &&
-        gapCondition(col(endColumn), col(startColumn))
-      startTable
-        .join(endTable, joinCond)
+    val keyColumns = gapKeys(sel, keyColumnsIn, startColumn, endColumn)
+    if (keyColumns.nonEmpty)
+      keyedGapPairs(sel, keyColumns, startColumn, endColumn, gapCondition)
+        .where(col("dj_viol"))
         .select(keyColumns.map(col) :+ col(startColumn) :+ col(endColumn): _*)
-    } else {
+    else {
       // Keyless: one global timeline (reference `db_access.py:523-529` with
       // an all-columns-consumed selection). Ranks come from the distributed
       // bucket scheme (CumSum), not an unpartitioned window — no
@@ -870,11 +798,13 @@ object Intervals {
       // cleaner once the result is unreferenced)
       val startTable = CumSum.withGlobalRank(
         graft.core.Blocks.checkpoint(
-          notInOtherInterval(sel, startColumn).select(col(startColumn))),
+          notInOtherIntervalGlobal(sel, startColumn, endColumn, startColumn)
+            .select(col(startColumn))),
         startColumn, "dj_start_rank")
       val endTable = CumSum.withGlobalRank(
         graft.core.Blocks.checkpoint(
-          notInOtherInterval(sel, endColumn).select(col(endColumn))),
+          notInOtherIntervalGlobal(sel, startColumn, endColumn, endColumn)
+            .select(col(endColumn))),
         endColumn, "dj_end_rank")
       startTable
         .join(
@@ -885,35 +815,176 @@ object Intervals {
     }
   }
 
-  def gapResult(
-      spark: SparkSession,
-      ref: DataRef,
+  /** Keyless NOT EXISTS: the selection rows whose `pointCol` is not strictly
+    * inside any interval of the whole selection (reference
+    * `db_access.py:475-496`), as a union-tag sweep instead of an anti-join:
+    * interval events (coord = start, carrying end) and probe rows
+    * (coord = point) sort by (coord, tag) with probes BEFORE events at equal
+    * coord, and a probe is strictly inside some other interval iff the
+    * running max of interval ends exceeds it. The tie-break preserves the
+    * reference's strict `point > start`, which also makes self-exclusion
+    * automatic. The running max goes through `CumSum.withRunningMax`'s
+    * range-bucket scheme (per-bucket windows plus a driver-side prefix-max
+    * carry; equal coords land in one bucket), so there is no unpartitioned
+    * window. NULL semantics match the anti-join: a NULL-coordinate probe is
+    * kept, NULL-start intervals contain nothing, NULL ends are ignored.
+    */
+  private def notInOtherIntervalGlobal(
+      sel: DataFrame,
+      startColumn: String,
+      endColumn: String,
+      pointCol: String): DataFrame = {
+    val probes = sel
+      .withColumn("dj_coord", col(pointCol))
+      .withColumn("dj_end", lit(null).cast(sel.schema(endColumn).dataType))
+      .withColumn("dj_is_iv", lit(0))
+    val events = sel
+      .select(col(startColumn).as("dj_coord"), col(endColumn).as("dj_end"))
+      .where(col("dj_coord").isNotNull)
+      .withColumn("dj_is_iv", lit(1))
+    CumSum
+      .withRunningMax(
+        probes.unionByName(events, allowMissingColumns = true),
+        "dj_coord", Seq("dj_is_iv"), "dj_end", "dj_runmax")
+      .where(
+        col("dj_is_iv") === 0 &&
+          coalesce(!(col("dj_runmax") > col("dj_coord")), lit(true)))
+      .drop("dj_coord", "dj_end", "dj_is_iv", "dj_runmax")
+  }
+
+  /** Keyed gap pairs: the reference's two NOT-EXISTS point tables, their
+    * per-column `row_number` ranks and the rank equi-join
+    * (`db_access.py:475-596`), as ONE per-key sweep and one aggregation.
+    *
+    *   1. Explode: every selection row becomes a start probe, an end probe
+    *      and an interval event at `start` carrying `end` (NULL-start
+    *      events dropped — they contain nothing). The coordinate has the
+    *      type of `coalesce(start, end)`; start and end values keep theirs.
+    *   2. Sweep: one window per key ordered by (coord, tag), probes BEFORE
+    *      events at equal coordinates — O(n log n), where the reference's
+    *      anti-join rescans its key group's intervals for every point. A
+    *      probe is free (not strictly inside another interval of its key)
+    *      iff the running max of event ends does not exceed it — the
+    *      tie-break keeps the reference's strict `point > start`, and a
+    *      NULL coordinate or an empty max keeps the probe. Running counts
+    *      of free starts and free ends are their `row_number` ranks, since
+    *      the sort is by value (NULLs first, as in the reference's
+    *      ascending order).
+    *   3. Pair: a free start of rank r gets pair r-1, a free end of rank k
+    *      gets pair k, so grouping on (keys, pair) joins end k with start
+    *      k+1 — rank pairing, not adjacency, so duplicate boundary points
+    *      shift the alignment exactly as in the reference. The grouping is
+    *      satisfied by the window's key partitioning: no second exchange.
+    *
+    * Earlier fusions were rejected both ways: adjacency pairing (one
+    * `lead()` window) is not the reference's semantics once duplicate
+    * boundary points shift the rank alignment (IntervalSpec's truth
+    * tables), and rank pairing by a join of two sweeps duplicated the whole
+    * sweep subtree per join branch. This one pairs by rank through a
+    * `groupBy` on the window's existing key partitioning, so there is
+    * neither a join nor a duplicated subtree.
+    *
+    * Every key group keeps at least one free probe (its smallest start, or
+    * any probe when all its starts are NULL), so every key of the selection
+    * has at least one pair row.
+    *
+    * Returns per (keys, pair): the keys, start, end and `dj_viol`. A pair
+    * violates only with both sides present, no NULL key (the reference's
+    * key equi-join never matches NULL) and `gapCondition(end, nextStart)`
+    * true.
+    */
+  private def keyedGapPairs(
+      sel: DataFrame,
       keyColumns: Seq[String],
       startColumn: String,
       endColumn: String,
+      gapCondition: (Column, Column) => Column): DataFrame = {
+    val keys = keyColumns.map(col)
+    val coordType = sel.select(coalesce(col(startColumn), col(endColumn))).schema.head.dataType
+    val startType = sel.schema(startColumn).dataType
+    val endType = sel.schema(endColumn).dataType
+    // tags: 0 start probe, 1 end probe, 2 interval event
+    def point(tag: Int, coord: String, start: Column, end: Column): Column =
+      struct(
+        lit(tag).as("dj_tag"),
+        col(coord).cast(coordType).as("dj_coord"),
+        start.cast(startType).as("dj_s"),
+        end.cast(endType).as("dj_e"))
+    val none = lit(null)
+    val tag = col("dj_tag")
+    val w = Window
+      .partitionBy(keys: _*)
+      .orderBy(col("dj_coord"), tag)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    def freeCount(t: Int): Column = count(when(col("dj_free") && tag === t, 1)).over(w)
+    sel
+      .select(keys :+ explode(array(
+        point(0, startColumn, col(startColumn), none),
+        point(1, endColumn, none, col(endColumn)),
+        point(2, startColumn, none, col(endColumn)))).as("dj_p"): _*)
+      .select(keys :+ col("dj_p.*"): _*)
+      .where(tag < 2 || col("dj_coord").isNotNull)
+      .withColumn("dj_runmax", max(when(tag === 2, col("dj_e"))).over(w))
+      .withColumn("dj_free",
+        tag < 2 && coalesce(!(col("dj_runmax") > col("dj_coord")), lit(true)))
+      .withColumn("dj_pair", when(tag === 0, freeCount(0) - 1).otherwise(freeCount(1)))
+      .where(col("dj_free"))
+      .groupBy(keys :+ col("dj_pair"): _*)
+      .agg(
+        max(tag === 0).as("dj_has_start"),
+        max(tag === 1).as("dj_has_end"),
+        max(col("dj_s")).as(startColumn),
+        max(col("dj_e")).as(endColumn))
+      .select(keys :+ col(startColumn) :+ col(endColumn) :+
+        (col("dj_has_start") && col("dj_has_end") &&
+          keys.map(_.isNotNull).reduce(_ && _) &&
+          coalesce(gapCondition(col(endColumn), col(startColumn)), lit(false)))
+          .as("dj_viol"): _*)
+  }
+
+  def gapResult(
+      spark: SparkSession,
+      ref: DataRef,
+      keyColumnsIn: Seq[String],
+      startColumn: String,
+      endColumn: String,
       gapCondition: (Column, Column) => Column): IntervalResult = {
-    // persist across the count + sample actions (the keyless flavor runs
-    // the anti-join + rank machinery — recomputing it per action doubles
-    // the most expensive plan in the gap path)
-    val violations =
-      gapViolations(spark, ref, keyColumns, startColumn, endColumn, gapCondition).cache()
-    try {
-      val effectiveKeys =
-        if (keyColumns.nonEmpty) keyColumns
-        else ref.selection(spark).columns.toSeq.filterNot(c => c == startColumn || c == endColumn)
-      if (effectiveKeys.nonEmpty)
-        IntervalResult(
-          nViolationKeys = violations.select(effectiveKeys.map(col): _*).distinct().count(),
-          nDistinctKeys = distinctKeyCount(spark, ref, effectiveKeys),
-          violationSample = violations.head(1).headOption)
-      else
-        // Keyless: every gap pair is one violation on the single global
-        // timeline; the denominator is the distinct (start, end) row count.
+    val sel = ref.selection(spark)
+    val keyColumns = gapKeys(sel, keyColumnsIn, startColumn, endColumn)
+    if (keyColumns.nonEmpty) {
+      // one action: per key whether any pair violates plus one violating
+      // pair, then the key count, the violating-key count and a sample
+      val keys = keyColumns.map(col)
+      val viol = col("dj_viol")
+      val row = keyedGapPairs(sel, keyColumns, startColumn, endColumn, gapCondition)
+        .groupBy(keys: _*)
+        .agg(
+          max(viol).as("dj_key_viol"),
+          first(when(viol, struct(keys :+ col(startColumn) :+ col(endColumn): _*)),
+            ignoreNulls = true).as("dj_sample"))
+        .agg(
+          count(lit(1)),
+          count(when(col("dj_key_viol"), 1)),
+          first(col("dj_sample"), ignoreNulls = true))
+        .head()
+      IntervalResult(
+        nViolationKeys = row.getLong(1),
+        nDistinctKeys = row.getLong(0),
+        violationSample = Option(row.getStruct(2)))
+    } else {
+      // Keyless: every gap pair is one violation on the single global
+      // timeline; the denominator is the distinct (start, end) row count.
+      // Persist across the count + sample actions: the anti-join + rank
+      // machinery is the most expensive plan in the gap path.
+      val violations =
+        gapViolations(spark, ref, keyColumns, startColumn, endColumn, gapCondition).cache()
+      try
         IntervalResult(
           nViolationKeys = violations.count(),
           nDistinctKeys = distinctKeyCount(spark, ref, Seq.empty),
           violationSample = violations.head(1).headOption)
-    } finally violations.unpersist()
+      finally violations.unpersist()
+    }
   }
 
   /** Date gap condition: day difference strictly greater than the legitimate

@@ -134,11 +134,12 @@ object DumpPlans {
 
     section(
       "interval gap sweep (keyed)",
-      "The not-inside-another-interval filter is a union-tag sweep, NOT an " +
-        "anti-join: each branch is one `Window` with partitionSpec = key " +
-        "ordered by (coord, tag) taking a running max of interval ends — no " +
-        "per-key-group quadratic rescans. The only Join left is the " +
-        "rank-pairing equi-join of the two branches (broadcast here).",
+      "One per-key sweep, NOT an anti-join and no rank join: each row " +
+        "explodes to a start probe, an end probe and an interval event; " +
+        "`Window`s with partitionSpec = key ordered by (coord, tag) take the " +
+        "running max of interval ends and the running counts of free starts " +
+        "and ends (their ranks); the rank pairing is a `HashAggregate` on " +
+        "(key, pair) that reuses the window's key partitioning — one Exchange.",
       {
         val iv = spark.read.parquet(s"$dir/lineitem.parquet")
           .select(col("l_suppkey"), col("l_quantity").as("s_num"),

@@ -223,6 +223,23 @@ class PlanSpec extends AnyFunSuite {
       s"exactly one shuffle in the sweep plan:\n$physical")
   }
 
+  test("keyed gap sweep: one key exchange, no rank join") {
+    val df = spark.read.parquet(s"$dir/lineitem.parquet")
+      .select(col("l_suppkey"), col("l_quantity").as("s_num"),
+        (col("l_quantity") + 2.0).as("e_num"))
+    val qe = graft.ops.Intervals
+      .gapViolations(spark, DataRef(graft.core.FrameSource(df, "qty_intervals")),
+        Seq("l_suppkey"), "s_num", "e_num", graft.ops.Intervals.numericGapCondition(3.0))
+      .queryExecution
+    assert(!qe.executedPlan.toString.contains("Join"),
+      s"the keyed gap sweep must not join:\n${qe.executedPlan}")
+    val physical = qe.executedPlan.toString
+    assert("Exchange ".r.findAllIn(physical).size == 1,
+      s"exactly one shuffle in the keyed gap plan:\n$physical")
+    assert(physical.contains("Exchange hashpartitioning(l_suppkey"),
+      s"the one shuffle must be on the key:\n$physical")
+  }
+
   test("DSIR resample plans a distributed top-k, not a corpus-wide rank window") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
