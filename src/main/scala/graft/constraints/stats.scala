@@ -1,6 +1,7 @@
 package graft.constraints
 
 import org.apache.spark.sql.SparkSession
+import org.slf4j.LoggerFactory
 
 import graft.core.{DataRef, TestResult}
 import graft.ops.Stats
@@ -23,8 +24,8 @@ final case class KolmogorovSmirnov2Sample(
     // pass (the separate row-count jobs of round 1 are folded in)
     val (d, n, m) = Stats.ks2SampleWithCounts(spark, ref, ref2Required)
     if (math.min(n, m) < 35)
-      System.err.println(
-        "Warning: approximate p-value is not accurate enough below 35 samples.")
+      KolmogorovSmirnov2Sample.log.warn(
+        "approximate p-value is not accurate enough below 35 samples")
     val accepted = Stats.ksCheckAcceptance(d, n, m, significanceLevel)
     if (accepted) TestResult.success(description)
     else {
@@ -39,6 +40,10 @@ final case class KolmogorovSmirnov2Sample(
           p.map(v => s", approximate p-value: $v").getOrElse("") + ".")
     }
   }
+}
+
+object KolmogorovSmirnov2Sample {
+  private val log = LoggerFactory.getLogger(classOf[KolmogorovSmirnov2Sample])
 }
 
 /** Chance-corrected label agreement floor: Cohen's κ between two

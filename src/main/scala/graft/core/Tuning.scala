@@ -1,6 +1,6 @@
 package graft.core
 
-/** Session-sizing heuristics shared by Bench / Verify / TimeQuery. */
+/** Session-sizing heuristics shared by Bench and Verify. */
 object Tuning {
 
   /** AQE wide-start (`spark.sql.adaptive.coalescePartitions.initialPartitionNum`)
@@ -9,7 +9,7 @@ object Tuning {
     * History: a flat 512 fixed an r5 superlinear sf10 regression (100×
     * shuffle volume through `cpus` reducers spilled) but cost ~2× fixed
     * overhead on small many-stage queries; r7 sized it to
-    * `inputBytes / 4 MB` (sf10 → 425). The r10 A/B (WideProbe, sf10
+    * `inputBytes / 4 MB` (sf10 → 425). An r10 A/B of the two starts (sf10
     * ~1.7 GB) showed the 4 MB target had become pure overhead: after the
     * count-first candidate caps and the 8-B/shingle representation, EVERY
     * sf10 heavy runs as fast or faster at wide = 32 than at 425

@@ -544,9 +544,7 @@ object Dedup {
       // position) — stage 2's exact Jaccard discards the strays and the
       // output is identical.
       def narrowed(sides: DataFrame) =
-        if (sys.env.contains("GRAFT_NO_NARROW"))
-          sides.select(col(idCol), col("signature"))
-        else sides.select(
+        sides.select(
           col(idCol),
           transform(col("signature"),
             x => (x.bitwiseAND(lit(0xFFFFL)) - lit(32768L)).cast("smallint"))
@@ -1077,7 +1075,6 @@ object Dedup {
     // plan every round — analysis alone goes exponential). Superseded
     // checkpoint blocks are reclaimed by the context cleaner once the
     // previous frame goes unreferenced.
-    val t0 = System.nanoTime()
     // materialize the DIRECTED pairs first: symmetrizing with unionAll
     // embeds the (expensive — LSH / inverted-index) pair plan twice, and
     // the two branches would recompute it per branch, racing any lazy
@@ -1098,10 +1095,6 @@ object Dedup {
       if (probe.length <= smallGraphEdgeCap &&
           probe.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
         graft.core.Blocks.release(half)
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          System.err.println(
-            f"[cc] small-graph union-find over ${probe.length} edges: " +
-              f"${(System.nanoTime() - t0) / 1e9}%.1fs")
         return smallGraphComponents(
           pairs.sparkSession,
           probe.map(r => (r.get(0).asInstanceOf[Number].longValue(),
@@ -1115,8 +1108,6 @@ object Dedup {
       .unionAll(half.select(col("dj_dst").as("dj_src"), col("dj_src").as("dj_dst")))
       .distinct())
     graft.core.Blocks.release(half) // sym is materialized; the directed half is dead
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(f"[cc] edge checkpoint: ${(System.nanoTime() - t0) / 1e9}%.1fs")
     var labels = sym
       .select(col("dj_src").as("dj_id"))
       .distinct()
@@ -1185,9 +1176,6 @@ object Dedup {
       labels = next
       done = changed == 0
       iters += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(
-          f"[cc] round $iters: $changed labels changed, ${(System.nanoTime() - t0) / 1e9}%.1fs elapsed")
     }
     // a silently-wrong clustering is worse than an error: non-convergence
     // means components deeper than maxIters exist and labels are still
@@ -1363,7 +1351,7 @@ object Dedup {
     // flavor: hash every token ONCE with xxhash64 per row, then
     // fingerprint each window as the 128-bit fp128 struct over its 64-bit
     // token-hash slice — no per-window string build, no cryptographic
-    // digest (the tools.BootProbe-measured 13× pattern, same as
+    // digest (md5 measured 13× slower than xxhash64, same as
     // Dsir/bootstrapMeanCI), and collision-safe at corpus scale (these
     // flags DELETE text — see fp128).
     // Tokens are whitespace-split, so the two flavors group identically:

@@ -42,21 +42,13 @@ object Events {
     * Output: every left row (left join semantics) plus each payload column
     * as `asof_<name>` and the matched timestamp as `asof_<rightTs>`.
     *
-    * `slimProbes`: the default plan carries the FULL left row through the
-    * per-key window sort — for a wide left schema the sort buffers (and
-    * spills) all that payload. With `slimProbes = true` the probes are
-    * projected to (keys, ts, rowid) before the sweep and the payload is
-    * hash-joined back by rowid afterwards: the sort touches only slim
-    * rows at the price of pinning the row-id frame (one eager local
-    * checkpoint of the left table) plus one extra shuffle for the
-    * join-back. Measured A/B (graft.tools.AsofProbe, sf0.1 and sf1 events,
-    * payload widths 0–16 kB, local[32]/128 GiB): the DEFAULT wins at every
-    * width — in a single JVM with ample memory the wide window sort never
-    * spills, while the slim path always pays its checkpoint + wide
-    * join-back shuffle (e.g. 8.3 s vs 10.5 s at 16 kB payload, sf0.1).
-    * The flag exists for memory-constrained clusters where per-partition
-    * payload exceeds executor sort buffers and the sort would spill; it is
-    * deliberately NOT the default.
+    * The probes carry the FULL left row through the per-key window sort.
+    * Projecting them to (keys, ts, rowid) and joining the payload back by
+    * rowid afterwards was measured slower at every payload width (sf0.1
+    * and sf1 events, 0–16 kB payloads, local[32]/128 GiB): the wide window
+    * sort never spilled, while the slim spelling always paid an eager
+    * checkpoint of the left table plus a wide join-back shuffle (e.g.
+    * 8.3 s vs 10.5 s at 16 kB payload, sf0.1).
     */
   def asofJoin(
       left: DataFrame,
@@ -68,27 +60,10 @@ object Events {
       tieBreak: Option[String] = None,
       strict: Boolean = false,
       withinTolerance: Option[(Column, Column) => Column] = None,
-      slimProbes: Boolean = false,
       direction: String = "backward"): DataFrame = {
     require(keys.nonEmpty, "as-of join requires at least one key column")
     require(direction == "backward" || direction == "forward",
       s"direction must be backward or forward: $direction")
-    if (slimProbes) {
-      // rowids must be STABLE across the two plan branches that read them
-      // (probe sweep + payload join-back) — monotonically_increasing_id is
-      // partitioning-dependent, so pin it with an eager checkpoint
-      val withId = graft.core.Blocks.checkpoint(
-        left.withColumn("dj_rowid", monotonically_increasing_id()))
-      val slim = withId.select(
-        (keys :+ leftTs :+ "dj_rowid").map(col): _*)
-      val matched = asofJoin(
-        slim, right, keys, leftTs, rightTs, payloadCols,
-        tieBreak, strict, withinTolerance, slimProbes = false, direction)
-      val asofCols = s"asof_$rightTs" +: payloadCols.map(c => s"asof_$c")
-      return withId
-        .join(matched.select(("dj_rowid" +: asofCols).map(col): _*), Seq("dj_rowid"))
-        .select((left.columns.toSeq ++ asofCols).map(col): _*)
-    }
     val carrierTag = if (strict) 1 else 0
     val probeTag = 1 - carrierTag
     val tieExpr = tieBreak.map(col).getOrElse(lit(0))
@@ -143,8 +118,9 @@ object Events {
     * `(l, r) => abs(unix_micros(l) - unix_micros(r))` for exact
     * microsecond timestamps). Ties and a missing forward match choose
     * backward. Two sweeps over SLIM probes (keys, ts, rowid — the rowid
-    * pinned by one eager checkpoint) merged by rowid, payload joined
-    * back once. Output schema matches [[asofJoin]].
+    * pinned by one eager checkpoint, since monotonically_increasing_id is
+    * partitioning-dependent and three plan branches read it) merged by
+    * rowid, payload joined back once. Output schema matches [[asofJoin]].
     */
   def asofJoinNearest(
       left: DataFrame,
@@ -163,8 +139,7 @@ object Events {
     val asofCols = s"asof_$rightTs" +: payloadCols.map(c => s"asof_$c")
     def sweep(dir: String, prefix: String) = asofJoin(
       slim, right, keys, leftTs, rightTs, payloadCols, tieBreak,
-      strict = false, withinTolerance = None, slimProbes = false,
-      direction = dir)
+      strict = false, withinTolerance = None, direction = dir)
       .select(col("dj_rowid") +:
         asofCols.map(c => col(c).as(s"$prefix$c")): _*)
     val merged = withId

@@ -166,7 +166,7 @@ object Similarity {
     * that nTables·probeBudget/2^bits ≈ 1.5·[[targetFraction]] — the same
     * examined-fraction envelope as [[lshAutoParams]], spent better.
     * The r10 fixed-fraction sweep on the fresh-content 100× leg
-    * (tools.AnnFrontier) showed, all at fraction 0.156: blind Hamming-1
+    * showed, all at fraction 0.156: blind Hamming-1
     * (r9 auto) recall 0.692; ranked probing at the r9 shape 0.752; FINER
     * buckets + MORE tables + deeper ranked probing 0.862
     * (bits 12, 12 tables, budget 53). The shape that wins: buckets of
@@ -226,8 +226,8 @@ object Similarity {
     require(corpusSize >= 0, s"corpusSize must be non-negative: $corpusSize")
     val n = math.max(2L, corpusSize)
     // FINE cells are the recall lever at a fixed examined fraction — the
-    // r10 sweep on the fresh-content 100× leg (tools.AnnFrontier, all at
-    // exact-scored fraction 0.1, n = 200k): 200-member cells (the r9
+    // r10 sweep on the fresh-content 100× leg (all at exact-scored
+    // fraction 0.1, n = 200k): 200-member cells (the r9
     // sizing) recall 0.654; 100-member 0.705; 50-member 0.769; 25-member
     // 0.828. Cell count is capped at 8192 because FLAT IVF assignment
     // costs n·cells native dots (the honest scale boundary: past ~10M
@@ -1178,7 +1178,7 @@ object Similarity {
   /** Corpus-aware IMI sizing: (cellsPerHalf, halfShortlist, probeRowBudget).
     * cellsPerHalf = ⌈√(2n)⌉ (clamped to [16, 512]) puts ~2 expected members
     * in each PRODUCT cell — the r11 sweep on the fresh-content 100× leg
-    * (tools.ImiSweep, all at exact-scored fraction 0.1, n = 200k, budgeted
+    * (all at exact-scored fraction 0.1, n = 200k, budgeted
     * probing): 128 half-cells recall 0.714, 224 → 0.777, 320 → 0.790,
     * 448 → 0.803, 512 → **0.828** — equal to flat IVF's 0.828 at the same
     * fraction, for 2·512 half-dots ≈ 512 full-dot equivalents of
@@ -1599,10 +1599,11 @@ object Similarity {
     * refinement trades bit-reproducibility for tighter cells (see
     * [[fitCentroids]]).
     *
-    * 100 TB posture: assignment is a broadcast argmax over the (tiny)
-    * centroid literals — one corpus scan, no shuffle; within-cluster pair
-    * generation shuffles on cluster id with the same COUNT-FIRST
-    * `maxClusterSize` cap as every bucket-join in [[Dedup]] (a cell only
+    * 100 TB posture: assignment is a per-row argmax kernel over the
+    * (tiny) centroid table ([[assignCells]]) — one corpus scan, no
+    * shuffle; within-cluster pair generation shuffles on cluster id with
+    * the same COUNT-FIRST `maxClusterSize` cap as every bucket-join in
+    * [[Dedup]] (a cell only
     * self-joins when its member count is in [2, cap]); verification is
     * candidate-volume-sized (`Dedup.verifyPairs`). Scale `nClusters` with
     * the corpus (SemDeDup used 50k clusters at web scale) so the EXPECTED
@@ -1636,13 +1637,55 @@ object Similarity {
   /** Cluster count for [[semanticNearDups]] scaled to the corpus: the
     * EXPECTED cluster size tracks `targetClusterSize`, so within-cluster
     * candidate volume stays ~n·targetClusterSize/2 — linear in the corpus.
-    * Floor 16; no upper cap — past `maxLiteralCentroids` the assignment
-    * switches to the broadcast-join path (SemDeDup used 50k clusters at
-    * web scale), whose cost is the unavoidable n·k distance evaluations.
+    * Floor 16; no upper cap (SemDeDup used 50k clusters at web scale) —
+    * the assignment kernel's cost is the unavoidable n·k distance
+    * evaluations.
     */
   def semanticClusters(corpusSize: Long, targetClusterSize: Int = 200): Int = {
     require(targetClusterSize > 0, s"targetClusterSize must be positive: $targetClusterSize")
     math.max(16L, math.min(Int.MaxValue.toLong, corpusSize / targetClusterSize)).toInt
+  }
+
+  /** Per-row SemDeDup cell assignment over `base` = (id, vec): each row
+    * joins its `nProbes` best cells by ROUNDED cosine (argmax over
+    * −round(cos, 6), exact, ties to the smallest centroid id — the same
+    * coarse-membership trick as the near-dup oracles: a last-ulp engine
+    * divergence only matters within ~1e-13 of a rounding midpoint).
+    * Output: base's columns + `cluster` + `dj_primary` (rank-1 cell).
+    *
+    * NearestCellsCos embeds the centroid table as a compact plan constant
+    * and ranks the cells per ROW in one codegen'd loop — one corpus scan,
+    * no aggregate, no join, no shuffle; duplicate ids assign per row. A
+    * literal transform+array_sort argmax is interpreted (ArrayTransform and
+    * ArraySort are CodegenFallback) and measured 2× slower at k = 64 on
+    * the corpus assignment job; it survives as the test-only reference
+    * `SemanticAssignReference`, which this kernel matches bit for bit.
+    */
+  private[graft] def assignCells(
+      base: DataFrame,
+      withNorms: Seq[(Long, Seq[Double], Double)],
+      nProbes: Int): DataFrame = {
+    import graft.functions.NearestCellsCos.nearestCellsCos
+    val ranked = nearestCellsCos(
+      col("vec"),
+      withNorms.map { case (cid, v, _) => (cid, v) },
+      withNorms.map(_._3),
+      nProbes, divideByRowNorm = true, round6 = true)
+    val cols = base.columns.map(col)
+    if (nProbes == 1)
+      base.select(
+        cols :+ element_at(ranked, 1).as("cluster") :+
+          lit(true).as("dj_primary"): _*)
+    else
+      // multi-probe: the row fans out to its nProbes best cells — the
+      // explode multiplies rows, not scans. posexplode marks the rank-1
+      // (primary) cell: the size cap must count primaries only, so it
+      // binds identically at every `probes`
+      base
+        .select(cols :+ posexplode(ranked): _*)
+        .select(
+          cols :+ col("col").as("cluster") :+
+            (col("pos") === 0).as("dj_primary"): _*)
   }
 
   def semanticNearDups(
@@ -1654,15 +1697,6 @@ object Similarity {
       lloydIters: Int = 0,
       maxClusterSize: Int = 1000,
       corpusSize: Option[Long] = None,
-      // r15 default 0: the NearestCellsCos kernel path serves EVERY k —
-      // the literal transform+array_sort argmax is interpreted
-      // (ArrayTransform/ArraySort are CodegenFallback) and measured 2×
-      // slower at k = 64 on the corpus assignment job; the kernel is
-      // bit-identical (same rounded-cosine scoring and (−cos, cid) tie
-      // order — SemanticProbeSpec pins path equality, and the r15 sf0.1
-      // check matched both probes flavors exactly). The literal path
-      // stays for explicit opt-in/parity testing.
-      maxLiteralCentroids: Int = 0,
       probes: Int = 1): DataFrame = {
     require(nClusters > 0, s"nClusters must be positive: $nClusters")
     require(maxClusterSize >= 2, s"maxClusterSize must be at least 2: $maxClusterSize")
@@ -1680,103 +1714,18 @@ object Similarity {
           lit(0L).as("cluster"),
           lit(0.0).as("cosine"))
         .where(lit(false))
-    // Both assignment paths share the arithmetic: centroid norms are
-    // driver-computed constants (left-to-right sum of squares — the exact
-    // doubles the HOF fold would produce), the row norm is computed ONCE
-    // per row, and the argmax runs over ROUNDED cosine (negated — exact —
-    // for an ascending sort key) with ties to the smallest centroid id:
-    // the same coarse-membership trick as the near-dup oracles (a last-ulp
-    // engine divergence only matters within ~1e-13 of a rounding
-    // midpoint). Identical operands in identical order → the two paths are
-    // bit-identical; only the plan shape differs.
+    // centroid norms are driver-computed constants (left-to-right sum of
+    // squares)
     val withNorms = centroids.map { case (cid, v) =>
       (cid, v, math.sqrt(v.map(x => x * x).sum))
     }
     val nProbes = math.min(probes, centroids.size)
-    val assignedPlan =
-      if (centroids.size <= maxLiteralCentroids) {
-        // small k: centroids as plan literals, per-row argmax — one corpus
-        // scan, no join, no shuffle
-        val centroidArrN = array(withNorms.map { case (cid, v, nrm) =>
-          struct(
-            lit(cid).as("cid"),
-            array(v.map(lit): _*).as("cvec"),
-            lit(nrm).as("cnorm"))
-        }: _*)
-        val sortedCids =
-          transform(
-            array_sort(
-              transform(centroidArrN, c => struct(
-                (-round(
-                  dot(col("vec"), c.getField("cvec")) /
-                    (col("dj_nrm") * c.getField("cnorm")),
-                  6)).as("neg"),
-                c.getField("cid").as("cid")))),
-            s => s.getField("cid"))
-        if (nProbes == 1)
-          base
-            .withColumn("dj_nrm", norm(col("vec")))
-            .select(
-              col(idCol),
-              col("vec"),
-              element_at(sortedCids, 1).as("cluster"),
-              lit(true).as("dj_primary"))
-        else
-          // multi-probe: the row fans out to its nProbes best cells — still
-          // one corpus scan, no join; the explode multiplies rows, not
-          // scans. posexplode marks the rank-1 (primary) cell: the size cap
-          // below must count primaries only, so it binds identically at
-          // every `probes`
-          base
-            .withColumn("dj_nrm", norm(col("vec")))
-            .select(
-              col(idCol),
-              col("vec"),
-              posexplode(slice(sortedCids, 1, nProbes)))
-            .select(
-              col(idCol),
-              col("vec"),
-              col("col").as("cluster"),
-              (col("pos") === 0).as("dj_primary"))
-      } else {
-        // large k (SemDeDup's web-scale regime): a plan-literal array this
-        // wide would bloat every task's codegen — but the broadcast-argmin
-        // kernel that replaced it planned its min(struct)/window as a
-        // SORTING (and at n·k volume, spilling) aggregate over every
-        // scored row (see ivfCorpusClusters). NearestCellsCos embeds the
-        // centroid table as a compact plan constant instead and ranks the
-        // nProbes best cells per ROW in one codegen'd loop — identical
-        // rounded-cosine scoring and (−cos, cid) tie order, same
-        // posexplode shape as the literal path, no aggregate, no
-        // join-back, no shuffle. Duplicate ids assign per-row exactly
-        // like the literal path (the keyed kernel raised on them only
-        // because its groupBy would merge the duplicates' scores).
-        import graft.functions.NearestCellsCos.nearestCellsCos
-        val ranked = nearestCellsCos(
-          col("vec"),
-          withNorms.map { case (cid, v, _) => (cid, v) },
-          withNorms.map(_._3),
-          nProbes, divideByRowNorm = true, round6 = true)
-        if (nProbes == 1)
-          base.select(
-            col(idCol),
-            col("vec"),
-            element_at(ranked, 1).as("cluster"),
-            lit(true).as("dj_primary"))
-        else
-          base
-            .select(col(idCol), col("vec"), posexplode(ranked))
-            .select(
-              col(idCol),
-              col("vec"),
-              col("col").as("cluster"),
-              (col("pos") === 0).as("dj_primary"))
-      }
     // read three times below (sizes, two join sides) — the argmax kernel
     // over the corpus must run once, not per branch; registry-tracked so a
     // harness/constraint scope can release it the moment the pairs are
     // consumed
-    val assigned = graft.core.Blocks.checkpoint(assignedPlan)
+    val assigned =
+      graft.core.Blocks.checkpoint(assignCells(base, withNorms, nProbes))
     // the cap counts PRIMARY members (probes-independent — at probes = 1
     // this is exactly the old between(2, maxClusterSize) on totals); the
     // probes·maxClusterSize total guard is the pathological-visitor bound

@@ -1026,8 +1026,8 @@ object Stats {
     // u(id, seed, b): a 52-bit dyadic-lattice uniform per (row, replicate).
     // Default flavor: top 52 bits of xxhash64(id, seed, b) — one codegen'd
     // native hash per exploded row (the Dsir hash-flavor convention; the
-    // md5 chain measured 13× slower at 100 replicates × 1M rows —
-    // tools.BootProbe, 1.5 s vs 20.0 s warm).
+    // md5 chain measured 13× slower at 100 replicates × 1M rows: 1.5 s
+    // vs 20.0 s warm on the sf1 events table).
     // `md5Flavor` keeps the oracle-recomputable spelling: first 13 md5 hex
     // digits of "id:seed:b" (the Dsir.hashUniform lattice, extended with
     // the replicate index). Both are exact dyadic fractions; w = the

@@ -16,7 +16,7 @@ class AnnAutoSpec extends AnyFunSuite {
 
   test("lshAutoParams: small corpora examine ~everything, big corpora bound cost") {
     // n=2000, k=10 (the bench's honest leg): bits 2, 3 tables — examined
-    // fraction bound 1.0, measured recall 0.997 (AnnSweep)
+    // fraction bound 1.0, measured recall 0.997 on the sf0.001 embeddings
     assert(Similarity.lshAutoParams(2000, 10) === ((2, 3)))
     // 100× corpus: buckets stay ~256 expected members, tables cap at 8 —
     // the cost stays bounded and the FRACTION (not the bill) degrades
@@ -164,25 +164,22 @@ class AnnAutoSpec extends AnyFunSuite {
     // keyed argmin computed one shared argmin per id, so duplicate ids
     // clustered differently than the literal path scores them; the keyed
     // kernel closed it by raising loudly. The per-row native kernel
-    // (NearestCellsCos) removes the discontinuity outright — the large
-    // path now scores each row independently exactly like the literal
-    // path, so the strongest contract is plain equality of outputs on a
-    // corpus WITH a duplicated id.
+    // (NearestCellsCos) removes the discontinuity outright — it scores
+    // each row independently exactly like the literal reference, so the
+    // strongest contract is equality of the assigned (id, cluster,
+    // primary) multisets on a corpus WITH a duplicated id.
     val v = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val dupId = v.limit(1).collect().head.getAs[Number]("vec_id").longValue
     val dup = v.limit(400).union(v.limit(1)) // one duplicated vec_id
-    def pairs(maxLiteral: Int) = {
-      val r = Similarity.semanticNearDups(
-        dup, "vec_id", "embedding", threshold = 0.3,
-        nClusters = 300, corpusSize = Some(400),
-        maxLiteralCentroids = maxLiteral)
-        .select(col("id1"), col("id2"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      graft.core.Blocks.releaseAll()
-      r
+    for (probes <- Seq(1, 2)) {
+      val (kernel, literal) = SemanticAssignReference.semanticAssignments(
+        dup, "vec_id", "embedding",
+        nClusters = 300, probes = probes, corpusSize = Some(400))
+      // the duplicated id is assigned once per row, to the same cells
+      assert(kernel.collect { case ((id, _, true), n) if id == dupId => n }.toSeq == Seq(2))
+      assert(kernel === literal,
+        s"probes = $probes: only-kernel=${kernel.toSet -- literal.toSet} " +
+          s"only-literal=${literal.toSet -- kernel.toSet}")
     }
-    val kernel = pairs(256)   // 300 cells > 256 → the native per-row path
-    val literal = pairs(1024) // forced literal-array path
-    assert(kernel === literal,
-      s"only-kernel=${kernel -- literal} only-literal=${literal -- kernel}")
   }
 }

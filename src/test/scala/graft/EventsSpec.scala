@@ -88,27 +88,6 @@ class EventsSpec extends AnyFunSuite {
     assert(out(1).getLong(out(1).fieldIndex("asof_v")) == 40L)
   }
 
-  test("asofJoin slimProbes variant is row-identical to the default") {
-    val rnd = new scala.util.Random(7)
-    val left = df((1 to 120).map { i =>
-      (s"k${rnd.nextInt(5)}", rnd.nextInt(50).toLong,
-        null.asInstanceOf[java.lang.Long])
-    })
-    // unique (k, t) carriers: equal-coord carrier ties without a tieBreak
-    // are resolved arbitrarily, which would make this A/B flaky
-    val right = df(
-      for (k <- 0 until 5; t <- rnd.shuffle((0 until 50).toList).take(12))
-        yield (s"k$k", t.toLong, java.lang.Long.valueOf(k * 100L + t)))
-    def rows(slim: Boolean) = Events
-      .asofJoin(left, right, Seq("k"), "t", "t", Seq("v"), slimProbes = slim)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1),
-        if (r.isNullAt(r.fieldIndex("asof_t"))) null else r.getLong(r.fieldIndex("asof_t")),
-        if (r.isNullAt(r.fieldIndex("asof_v"))) null else r.getLong(r.fieldIndex("asof_v"))))
-      .sortBy(_.toString)
-    assert(rows(slim = true).toSeq == rows(slim = false).toSeq)
-  }
-
   test("asofJoin plan: no join operator, window partitioned by key") {
     val left = df(Seq(("a", 10L, null)))
     val right = df(Seq(("a", 8L, 1L)))

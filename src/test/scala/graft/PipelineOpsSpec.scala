@@ -1262,15 +1262,15 @@ class SemanticDedupSpec extends org.scalatest.funsuite.AnyFunSuite {
       4L -> Seq(0.98f, 0.15f, 0f),
       5L -> Seq(0.1f, 0.99f, 0f),
       6L -> Seq(0.05f, 0.98f, 0f))
-    def run(maxLit: Int) = Similarity
-      .semanticNearDups(df, "vec_id", "embedding", threshold = 0.9,
-        nClusters = 2, lloydIters = 0, corpusSize = Some(1),
-        maxLiteralCentroids = maxLit)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toSet
-    // maxLit=1 forces the large-k broadcast-join branch on the same data
-    assert(run(Int.MaxValue) == run(1))
+    // the NearestCellsCos kernel against the literal argmax reference on
+    // the assigned (id, cluster, primary) multiset, at one and two probes
+    for (probes <- Seq(1, 2)) {
+      val (kernel, literal) = SemanticAssignReference.semanticAssignments(
+        df, "vec_id", "embedding", nClusters = 2, probes = probes,
+        corpusSize = Some(1))
+      assert(kernel.values.sum == 6 * probes)
+      assert(kernel == literal, s"probes = $probes")
+    }
   }
 
   test("semanticNearDups: lloyd refinement still finds planted near-dups") {

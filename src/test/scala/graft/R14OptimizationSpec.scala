@@ -1,13 +1,20 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.Prop.propBoolean
+import org.scalacheck.util.Pretty
+import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{CumSum, Dedup, Stats}
 
 /** Equality pins for the r14 optimization-round internals: every rewrite
   * claims bit-identical results — these tests force BOTH code paths on the
-  * same data and compare.
+  * same data and compare. The staged MinHash verification (low-16-bit
+  * narrowed signature prefilter, then exact Jaccard) is compared with the
+  * single-pass broadcast verification on a fixture and on generated corpora.
   */
 class R14OptimizationSpec extends AnyFunSuite {
   import TestSpark._
@@ -37,42 +44,107 @@ class R14OptimizationSpec extends AnyFunSuite {
         else
           s"unique document body number $i with its own words " +
             s"${i * 7} ${i * 13} ${i * 29}"
-      (i.toLong, body + s" tail$i")
-    }.toDF("doc_id", "text")
+      (i.toLong, body + s" tail$i", i % 2 == 0)
+    }.toDF("doc_id", "text", "side")
+  }
+
+  /** A generated corpus row: the side it belongs to for `crossNearDups`,
+    * a nullable id and a nullable text.
+    */
+  private type Doc = (Boolean, Option[Long], Option[String])
+
+  private val words = Seq("alpha", "beta", "gamma", "delta", "river", "stone",
+    "cloud", "ember", "frost", "grove", "harbor", "island", "jungle", "kettle")
+  private val unicodeWords = Seq("日本語", "ñandú", "Ärger", "straße", "naïve",
+    "дом", "κόσμος", "🙂🙃", "e\u0301te")
+
+  private val wordGen = Gen.frequency(4 -> Gen.oneOf(words), 1 -> Gen.oneOf(unicodeWords))
+
+  private val baseTextGen: Gen[Seq[String]] =
+    Gen.choose(12, 30).flatMap(n => Gen.listOfN(n, wordGen))
+
+  /** A near-copy: one to three words replaced, dropped or inserted. */
+  private def mutated(base: Seq[String]): Gen[Seq[String]] =
+    Gen.choose(1, 3).flatMap(n => Gen.listOfN(n, Gen.zip(Gen.choose(0, 2),
+      Gen.choose(0, base.size - 1), wordGen))).map(_.foldLeft(base) {
+      case (ws, (0, i, w)) => ws.updated(i % ws.size, w)
+      case (ws, (1, i, _)) if ws.size > 1 => ws.patch(i % ws.size, Nil, 1)
+      case (ws, (_, i, w)) => ws.patch(i % ws.size, Seq(w), 0)
+    })
+
+  /** A planted cluster: a base text, its near-copies and exact copies. */
+  private val clusterGen: Gen[Seq[String]] = for {
+    base <- baseTextGen
+    nNear <- Gen.choose(1, 3)
+    near <- Gen.listOfN(nNear, mutated(base))
+    nExact <- Gen.choose(0, 2)
+  } yield (base +: near ++: Seq.fill(nExact)(base)).map(_.mkString(" "))
+
+  private val loneTextGen: Gen[Option[String]] = Gen.frequency(
+    1 -> Gen.const(None),
+    1 -> Gen.const(Some("")),
+    1 -> Gen.oneOf("ab", "a b", "日本", "x").map(Some(_)),
+    3 -> baseTextGen.map(ws => Some(ws.mkString(" "))))
+
+  private val corpusGen: Gen[Seq[Doc]] = for {
+    clusters <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, clusterGen))
+    lone <- Gen.choose(0, 8).flatMap(Gen.listOfN(_, loneTextGen))
+    texts = clusters.flatten.map(Some(_)) ++ lone
+    ids <- Gen.listOfN(texts.size, Gen.frequency(1 -> false, 9 -> true))
+    sides <- Gen.listOfN(texts.size, Gen.oneOf(false, true))
+    order <- Gen.pick(texts.size, texts.indices).map(_.toSeq)
+  } yield order.zipWithIndex.map { case (t, i) =>
+    (sides(t), if (ids(t)) Some(i.toLong) else None, texts(t))
+  }
+
+  private def corpus(docs: Seq[Doc]): DataFrame = {
+    val rows = docs.map { case (side, id, text) =>
+      Row(id.map(java.lang.Long.valueOf).orNull, text.orNull, side)
+    }
+    spark.createDataFrame(java.util.List.of(rows: _*), StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType),
+      StructField("side", BooleanType))))
+  }
+
+  private def pairSet(pairs: DataFrame): Set[(Long, Long, Long)] = {
+    val out = pairs.collect().map(r =>
+      (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e9))).toSet
+    graft.core.Blocks.releaseAll()
+    out
+  }
+
+  /** (broadcast verify, staged verify under a ~0 cap) of one pipeline. */
+  private def bothPaths(run: => DataFrame) =
+    (pairSet(run), withTinyBroadcastCap(pairSet(run)))
+
+  /** Staged ≡ broadcast on the fixture (which must find pairs), then on
+    * 100 generated corpora, at least a fifth of which must find pairs.
+    */
+  private def stagedMatchesBroadcast(run: DataFrame => DataFrame) = {
+    val (small, staged) = bothPaths(run(nearDupCorpus))
+    assert(small.nonEmpty, "fixture should produce at least one near-dup pair")
+    assert(staged == small)
+    var withPairs = 0
+    val prop = Prop.forAllNoShrink(corpusGen) { docs =>
+      val (small, staged) = bothPaths(run(corpus(docs)))
+      if (small.nonEmpty) withPairs += 1
+      (staged == small) :|
+        s"only-staged=${staged -- small} only-broadcast=${small -- staged} docs=$docs"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(100), prop)
+    assert(res.passed, Pretty.pretty(res))
+    assert(withPairs >= 20, s"only $withPairs generated corpora produced pairs")
   }
 
   test("minhashNearDups: staged big-candidate verification ≡ broadcast path") {
-    val docs = nearDupCorpus
-    def run() = Dedup
-      .minhashNearDups(docs, "text", "doc_id", threshold = 0.5)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        math.round(r.getDouble(2) * 1e9)))
-      .toSet
-    val small = run()               // normal cap → single-pass broadcast verify
-    graft.core.Blocks.releaseAll()
-    val staged = withTinyBroadcastCap(run()) // cap ~0 → staged sig-then-shingle
-    graft.core.Blocks.releaseAll()
-    assert(small.nonEmpty, "fixture should produce at least one near-dup pair")
-    assert(staged == small)
+    stagedMatchesBroadcast(df =>
+      Dedup.minhashNearDups(df, "text", "doc_id", threshold = 0.5))
   }
 
   test("crossNearDups: staged big-candidate verification ≡ broadcast path") {
-    val docs = nearDupCorpus
-    val a = docs.where(col("doc_id") % 2 === 0)
-    val b = docs.where(col("doc_id") % 2 === 1)
-    def run() = Dedup
-      .crossNearDups(a, b, "text", "doc_id", threshold = 0.5)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        math.round(r.getDouble(2) * 1e9)))
-      .toSet
-    val small = run()
-    graft.core.Blocks.releaseAll()
-    val staged = withTinyBroadcastCap(run())
-    graft.core.Blocks.releaseAll()
-    assert(small.nonEmpty)
-    assert(staged == small)
+    stagedMatchesBroadcast(df =>
+      Dedup.crossNearDups(df.where(col("side")), df.where(!col("side")),
+        "text", "doc_id", threshold = 0.5))
   }
 
   test("withRunningSumsNext ≡ withRunningSums + withNextValue, span exact") {

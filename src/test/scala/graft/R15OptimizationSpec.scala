@@ -1,10 +1,22 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.Prop.propBoolean
+import org.scalacheck.util.Pretty
+import org.scalatest.funsuite.AnyFunSuite
+
+object R15OptimizationSpec {
+
+  /** An edge list over int or bigint ids (`null` = NULL endpoint). */
+  final case class Graph(bigint: Boolean, edges: Seq[(java.lang.Long, java.lang.Long)])
+}
 
 /** Equality pins for the r15 optimization-round internals. */
 class R15OptimizationSpec extends AnyFunSuite {
+  import R15OptimizationSpec.Graph
   import TestSpark._
 
   test("matchingFraction agrees across long/int/smallint element types") {
@@ -74,29 +86,81 @@ class R15OptimizationSpec extends AnyFunSuite {
     assert(nullRow.isNullAt(0))
   }
 
+  private def frame(g: Graph): DataFrame = {
+    val t = if (g.bigint) LongType else IntegerType
+    def v(x: java.lang.Long): Any =
+      if (x == null) null else if (g.bigint) x else Integer.valueOf(x.intValue)
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(g.edges.map { case (a, b) => Row(v(a), v(b)) }, 4),
+      StructType(Seq(StructField("id1", t), StructField("id2", t))))
+  }
+
+  /** (id, cluster_id) rows with `smallGraphEdgeCap = cap`. */
+  private def components(g: Graph, cap: Int): Set[(Option[Long], Option[Long])] = {
+    def id(x: Any) = Option(x).map(_.asInstanceOf[Number].longValue)
+    val out = graft.ops.Dedup
+      .connectedComponents(frame(g), smallGraphEdgeCap = cap)
+      .collect().map(r => id(r.get(0)) -> id(r.get(1))).toSet
+    graft.core.Blocks.releaseAll()
+    out
+  }
+
+  /** The union-find path at cap = E and the loop at cap = E − 1. */
+  private def atCap(g: Graph) =
+    (components(g, g.edges.size), components(g, g.edges.size - 1))
+
+  private def node(bigint: Boolean): Gen[java.lang.Long] =
+    Gen.choose(0L, 40L).map(i => java.lang.Long.valueOf(if (bigint) (1L << 40) + i else i))
+
+  // chains longer than jumpAfter (= 2) and cliques, over random node ids
+  private def componentGen(bigint: Boolean): Gen[Seq[(java.lang.Long, java.lang.Long)]] =
+    Gen.oneOf(
+      Gen.choose(3, 12).flatMap(n => Gen.listOfN(n + 1, node(bigint)))
+        .map(ns => ns.zip(ns.tail)),
+      Gen.choose(3, 5).flatMap(n => Gen.listOfN(n, node(bigint)))
+        .map(ns => ns.combinations(2).map(p => (p(0), p(1))).toSeq),
+      Gen.choose(1, 4).flatMap(n => Gen.listOfN(n, Gen.zip(node(bigint), node(bigint)))))
+
+  private val graphGen: Gen[Graph] = for {
+    bigint <- Gen.oneOf(false, true)
+    comps <- Gen.choose(1, 4).flatMap(n => Gen.listOfN(n, componentGen(bigint)))
+    edges = comps.flatten
+    dups <- Gen.someOf(edges)
+    reversed <- Gen.someOf(edges).map(_.map(_.swap))
+    loops <- Gen.choose(0, 2).flatMap(n => Gen.listOfN(n, node(bigint))).map(_.map(x => (x, x)))
+    all <- Gen.pick(edges.size + dups.size + reversed.size + loops.size,
+      edges ++ dups ++ reversed ++ loops)
+  } yield Graph(bigint, all.toSeq)
+
   test("connectedComponents: small-graph union-find ≡ distributed loop") {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    // chains, a clique, self-contained pairs, duplicate edges, and a
-    // reversed-order edge — the shapes near-dup graphs produce
-    val edges = Seq(
-      Row(2L, 1L), Row(2L, 3L), Row(3L, 4L),       // chain → cluster 1
-      Row(10L, 11L), Row(11L, 12L), Row(10L, 12L), // triangle → cluster 10
-      Row(20L, 21L), Row(20L, 21L),                // dup edge
-      Row(31L, 30L)                                // reversed order
-    ) ++ (100L until 164L).map(i => Row(i, i + 1)) // 64-hop chain → 100
-    val pairs = spark.createDataFrame(
-      spark.sparkContext.parallelize(edges, 4),
-      StructType(Seq(StructField("id1", LongType), StructField("id2", LongType))))
-    def run(cap: Int) = graft.ops.Dedup
-      .connectedComponents(pairs, smallGraphEdgeCap = cap)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
-    val small = run(1 << 20)  // driver union-find
-    graft.core.Blocks.releaseAll()
-    val loop = run(0)         // distributed min-label loop
-    graft.core.Blocks.releaseAll()
+    // fixed input: chains, a clique, self-contained pairs, duplicate
+    // edges, and a reversed-order edge — the shapes near-dup graphs produce
+    def l(a: Long, b: Long) = (java.lang.Long.valueOf(a), java.lang.Long.valueOf(b))
+    val fixture = Graph(bigint = true, Seq(
+      l(2, 1), l(2, 3), l(3, 4),            // chain → cluster 1
+      l(10, 11), l(11, 12), l(10, 12),      // triangle → cluster 10
+      l(20, 21), l(20, 21),                 // dup edge
+      l(31, 30)                             // reversed order
+    ) ++ (100L until 164L).map(i => l(i, i + 1))) // 64-hop chain → 100
+    val (small, loop) = atCap(fixture)
     assert(small == loop)
-    assert(small.contains(4L -> 1L) && small.contains(12L -> 10L) &&
-      small.contains(30L -> 30L) && small.contains(164L -> 100L))
+    assert(Seq(4L -> 1L, 12L -> 10L, 30L -> 30L, 164L -> 100L)
+      .forall { case (a, b) => small.contains(Some(a) -> Some(b)) })
+
+    val prop = Prop.forAllNoShrink(graphGen) { g =>
+      val (small, loop) = atCap(g)
+      (small == loop) :|
+        s"only-union-find=${small -- loop} only-loop=${loop -- small} graph=$g"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(100), prop)
+    assert(res.passed, Pretty.pretty(res))
+
+    // a NULL endpoint keeps the graph off the union-find path even under
+    // the cap: the loop labels the NULL node (NULL, NULL), which the
+    // driver union-find could not produce
+    val withNull = Graph(bigint = false, Seq(l(1, 2), l(2, 3), (java.lang.Long.valueOf(5L), null)))
+    val underCap = components(withNull, withNull.edges.size)
+    assert(underCap.contains(None -> None), underCap)
+    assert(underCap == components(withNull, 0))
   }
 }

@@ -6,24 +6,23 @@ import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 
 /** Multi-probe SemDeDup pairing (`semanticNearDups(probes = p)`):
-  * containment, recall monotonicity, and literal/broadcast path agreement.
+  * containment, recall monotonicity, and agreement of the NearestCellsCos
+  * cell assignment with the literal reference (`SemanticAssignReference`).
   */
 class SemanticProbeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private val Thr = 0.3495
 
-  private def pairsOf(
-      probes: Int,
-      maxLiteralCentroids: Int = 512,
-      maxClusterSize: Int = 1000): Set[(Long, Long)] =
+  private def embeddings =
+    spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+
+  private def pairsOf(probes: Int, maxClusterSize: Int = 1000): Set[(Long, Long)] =
     Similarity
       .semanticNearDups(
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet"),
-        "vec_id", "embedding", Thr,
+        embeddings, "vec_id", "embedding", Thr,
         nClusters = 64, lloydIters = 0, corpusSize = Some(1),
-        maxClusterSize = maxClusterSize,
-        maxLiteralCentroids = maxLiteralCentroids, probes = probes)
+        maxClusterSize = maxClusterSize, probes = probes)
       .select(col("id1").cast("long"), col("id2").cast("long"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -68,14 +67,24 @@ class SemanticProbeSpec extends AnyFunSuite {
     val p2 = pairsOf(2, maxClusterSize = 12)
     assert(p1.nonEmpty)
     assert(p1.subsetOf(p2), s"probe-2 lost: ${(p1 -- p2).take(5)}")
-    // and the broadcast path applies the identical cap semantics
-    val p2b = pairsOf(2, maxLiteralCentroids = 0, maxClusterSize = 12)
-    assert(p2 === p2b)
+    // the cap reads the assigned cells, which match the literal reference
+    val (kernel, literal) = assignmentsOf(2)
+    assert(kernel === literal)
   }
 
+  private def assignmentsOf(probes: Int) =
+    SemanticAssignReference.semanticAssignments(
+      embeddings, "vec_id", "embedding",
+      nClusters = 64, probes = probes, corpusSize = Some(1))
+
   test("broadcast-join assignment path agrees with the literal path") {
-    // maxLiteralCentroids = 0 forces the broadcast top-p path; identical
-    // operands in identical order → identical pairs
-    assert(pairsOf(2) === pairsOf(2, maxLiteralCentroids = 0))
+    // the NearestCellsCos kernel against the literal transform+array_sort
+    // argmax: identical operands in identical order → identical
+    // (id, cluster, primary) multisets, at one probe and at two
+    for (probes <- Seq(1, 2)) {
+      val (kernel, literal) = assignmentsOf(probes)
+      assert(kernel.nonEmpty)
+      assert(kernel === literal, s"probes = $probes")
+    }
   }
 }
