@@ -178,7 +178,7 @@ object Bench {
     "q_embedding_neardup", "q_ngram_jaccard")
 
   /** Degraded 100×-leg form (r13 verdict task 3): the 3 cheapest members
-    * of [[Sf10Subset]] by the profile's credible fresh-content colds
+    * of [[Sf10Subset]] by their quiet-box fresh-content colds
     * (~4.7 / 9.6 / 17.9 s vs 23-35 s for the dropped three) — still one
     * prefix-sum, one banded-ANN, and one token-explode plan, at ~1/3 the
     * leg cost. Chosen when the scaled full-leg estimate busts the budget
@@ -418,14 +418,12 @@ object Bench {
     * across 32 fixed partitions, no IO, no shuffle beyond the final
     * single-row agg. Its wall time measures the MACHINE/SESSION, not the
     * data: a quiet box reads a stable value, a contended one reads an
-    * inflated one. Timed at leg start/end and on every fresh rerun
-    * session, recorded in the artifact — the r10 bench could not
-    * distinguish a code regression from session pressure (in-leg vs
-    * fresh-rerun disagreed up to 5.65× inside one driver session, and the
-    * judge had to arbitrate by hand-timing on quiet hardware); with the
-    * probe the attribution is in-artifact.
+    * inflated one. Timed at bench start (`calib0`, the `norm` block's
+    * reference), at leg start/end (recorded as `calib_s`) and before every
+    * budget decision (scales the step estimates), so a slow box shows in
+    * the artifact rather than reading as a code regression.
     */
-  private[graft] def calibProbe(spark: SparkSession): Double = {
+  private def calibProbe(spark: SparkSession): Double = {
     import org.apache.spark.sql.functions.{call_function, col, xxhash64}
     val t0 = System.nanoTime()
     // bit_xor, not sum: a sum of 64M full-range longs overflows under the
@@ -473,52 +471,9 @@ object Bench {
         smoothedCalib
     }
 
-  /** Committed quiet-box per-query profile (r12 verdict task 1): expected
-    * per-leg query times plus the calibration reading of the box that
-    * measured them. Machine-written flat JSON (one nesting level of
-    * `"leg":{"q":sec,…}` sections), parsed with the same regex posture as
-    * the index meta readers.
-    */
-  private case class Profile(calib: Double, legs: Map[String, Map[String, Double]])
-
-  private def loadProfile(path: String): Option[Profile] =
-    try {
-      val f = new java.io.File(path)
-      if (!f.exists()) None
-      else {
-        val json = new String(
-          java.nio.file.Files.readAllBytes(f.toPath),
-          java.nio.charset.StandardCharsets.UTF_8)
-        def section(name: String): Map[String, Double] = {
-          val m = java.util.regex.Pattern
-            .compile("\"" + name + "\"\\s*:\\s*\\{([^}]*)\\}")
-            .matcher(json)
-          if (!m.find()) Map.empty
-          else {
-            val p = java.util.regex.Pattern
-              .compile("\"([^\"]+)\"\\s*:\\s*(-?[0-9.eE+]+)")
-              .matcher(m.group(1))
-            val buf = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-            while (p.find()) buf.update(p.group(1), p.group(2).toDouble)
-            buf.toMap
-          }
-        }
-        val c = java.util.regex.Pattern
-          .compile("\"calib\"\\s*:\\s*(-?[0-9.eE+]+)").matcher(json)
-        Some(Profile(
-          calib = if (c.find()) c.group(1).toDouble else 0.0,
-          legs = Seq("primary", "sf1", "sf10", "sf10f")
-            .map(l => l -> section(l)).toMap))
-      }
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"bench: could not load profile $path: $e")
-        None
-    }
-
   /** Rebaselined quiet-box envelope (r12 verdict task 3): 0.93 s/query on
     * the primary leg — three concurring artifacts (r11 judge 0.94, r12
-    * builder 0.93, r12 driver's arbitrated reruns) at calibration
+    * builder 0.93, r12 driver) at calibration
     * 0.41-0.50 s; the unreproduced r10 0.59 s/q is retired. The minimal
     * artifact line reports measured s/q against this, box-normalized by
     * the calibration ratio.
@@ -528,14 +483,6 @@ object Bench {
 
   private case class QResult(
       name: String, t: Double, raw: Seq[Double], err: Option[String], mem: String)
-
-  /** Arbitrated fresh-session rerun record for one flagged query: every
-    * fresh attempt's time, the calibration probe of each attempt's
-    * session, and the verdict that explains the in-leg/rerun relation
-    * (see [[Bench.rerunVerdict]]).
-    */
-  private case class RerunInfo(
-      attempts: Seq[Double], calibs: Seq[Double], verdict: String)
 
   private def queriesJson(results: Iterable[QResult]): (String, String, String, String) = {
     val qs = results.map(r => s"\"" + r.name + "\":" + r.t)
@@ -548,6 +495,35 @@ object Bench {
       .mkString("{", ",", "}")
     (qs, raw, errs, mem)
   }
+
+  /** Round-stamped mirror of the full artifact (r14 verdict task 2):
+    * `bench_out.json` is overwritten by every run, so one lost driver
+    * artifact erased the per-query map for good. The mirror accumulates
+    * across rounds like `BENCH_r*.json`: tag `round` when given, else 1 +
+    * the highest `BENCH_r<N>.json` among `existing` (the working
+    * directory's file names). The CPU count is part of the name — the r15
+    * 8-core run overwrote the 32-core one under a shared name — and a name
+    * already in `existing` gets `_2`, `_3`, … appended. Only the default
+    * artifact path is mirrored; a custom `SPARK_GRAFT_BENCH_OUT` run names
+    * itself.
+    */
+  private[graft] def stampedOutName(
+      outPath: String,
+      round: Option[String],
+      cpus: Int,
+      existing: Set[String]): Option[String] =
+    if (outPath != "bench_out.json") None
+    else {
+      val tag = round.map(_.trim).filter(_.nonEmpty).getOrElse {
+        val re = "BENCH_r(\\d+)\\.json".r
+        val ns = existing.toSeq.collect { case re(n) => n.toInt }
+        (if (ns.isEmpty) 0 else ns.max + 1).toString
+      }
+      val base = s"bench_out_r${tag}_c$cpus"
+      Iterator.from(1)
+        .map(i => if (i == 1) s"$base.json" else s"${base}_$i.json")
+        .find(n => !existing.contains(n))
+    }
 
   def main(args: Array[String]): Unit = {
     // Total-wall budget (r11: the driver's run timed out mid-scale-gen and
@@ -614,74 +590,34 @@ object Bench {
     }
 
     // Bench-start calibration reference: the fixed-work probe's wall time
-    // in the very first (fresh, idle) session of the run. Every later
-    // calibration reads against this — a rerun session whose probe runs
-    // >1.3× slower than calib0 is itself contended, and its query times
-    // indict the session, not the code. Min of two runs: the first
-    // execution carries the probe's own JIT/codegen warm-up (measured 3.2 s
-    // vs 0.2 s steady-state), which would inflate the baseline and mask
-    // real contention.
+    // in the very first (fresh, idle) session of the run — the `norm`
+    // block divides s/query by it. Min of two runs: the first execution
+    // carries the probe's own JIT/codegen warm-up (measured 3.2 s vs 0.2 s
+    // steady-state), which would inflate the baseline.
     val calib0 = math.min(calibProbe(spark), calibProbe(spark))
 
-    // committed quiet-box profile: per-leg expected query times + the
-    // profiling box's calibration. Expectations scale to THIS box by
-    // calib0/profile.calib (a faster/slower box shifts every expectation
-    // together); live contention scales budget estimates by
-    // lastCalibSeen/profile.calib as the run proceeds.
-    val profile = loadProfile(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_PROFILE", "bench_profile.json"))
-    val profileCalib = profile.map(_.calib).filter(_ > 0)
     def clamp(v: Double, lo: Double, hi: Double) = math.max(lo, math.min(hi, v))
-    // this box's quiet speed vs the profile box's — multiplies EXPECTED
-    // query times (bounded: a 10× reading is contention, not hardware)
-    val expectScale = profileCalib
-      .map(pc => clamp(calib0 / pc, 0.5, 4.0)).getOrElse(1.0)
-    def profiled(legKey: String, name: String): Option[Double] =
-      profile.flatMap(_.legs.getOrElse(legKey, Map.empty).get(name))
     // the live budget-estimate multiplier: how much slower the box reads
     // RIGHT NOW (median of the recent probes — see smoothedCalib) than the
     // estimates' reference speed. ≥ 1 — estimates were measured quiet; a
-    // faster box just finishes early.
-    //
-    // The reference is the calibration the STATIC step estimates were
-    // actually observed at (r10/r11 quiet boxes, ~0.45 s — the envelope
-    // box), NOT profile.calib: the committed profile box reads 0.281 s,
-    // and dividing r10-era wall costs by the faster profile box's probe
-    // inflated every estimate ~1.6× on a normally-quiet box, skipping
-    // tail steps too eagerly (r13 advice).
+    // faster box just finishes early. The reference is the calibration the
+    // static step estimates were observed at (r10/r11 quiet boxes,
+    // ~0.45 s — the envelope box).
     val EstimateCalibRef = EnvelopeCalib
     def estScale: Double = {
       val c = smoothedCalib
       if (c <= 0) 1.0 else clamp(c / EstimateCalibRef, 1.0, 8.0)
     }
 
-    // robust quiet-calibration reference for contention comparisons: the
-    // min-of-two calib0 can be fluke-fast (probes on one r13 box spanned
-    // 0.07–1.05 s), and a tiny calib0 makes CalibContendedRatio×calib0
-    // mark every window contended, flooding the rerun targets up to the
-    // MaxRerunTargets cap. The committed profile's calibration floors it.
-    val quietCalibRef: Double =
-      math.max(math.max(calib0, profileCalib.getOrElse(0.0)), 1e-9)
-
     /** One leg: pre-touch the parquet (cold-IO separated from plan time),
-      * reset heap peaks, calibrate, time every query — with an INTERLEAVED
-      * calibration probe every [[ProbeEvery]] queries (r12 verdict task 1:
-      * the start/end brackets cannot see a mid-run contention episode, so
-      * ~50-60 s of proven contention sat between two quiet probes) — then
-      * calibrate again. `calibSeries` is the full probe sequence (start,
-      * one per group, end); `calibCtx` maps each query to the max of the
-      * probes bracketing its group — the "how contended was the box AROUND
-      * this measurement" reading rerun eligibility consumes.
+      * reset heap peaks, calibrate, time every query, then calibrate again.
       */
     case class LegRun(
         results: Seq[QResult],
         coldIo: Double,
         heapHwMb: Long,
         calibStart: Double,
-        calibEnd: Double,
-        calibSeries: Seq[Double],
-        calibCtx: Map[String, Double])
-    val ProbeEvery = 16
+        calibEnd: Double)
     def runLeg(
         dir: String,
         names: Option[Seq[String]],
@@ -693,8 +629,6 @@ object Bench {
       spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", wide)
       val calibStart = calibProbeSafe(spark)
       val acc = scala.collection.mutable.ArrayBuffer.empty[QResult]
-      val series = scala.collection.mutable.ArrayBuffer(calibStart)
-      val groupOf = scala.collection.mutable.LinkedHashMap.empty[String, Int]
       SparkEntry.queries
         .filter { case (name, _) => names.forall(_.contains(name)) }
         .foreach { case (name, fn) =>
@@ -703,7 +637,6 @@ object Bench {
           // `single`: the 100× spot leg runs each query once — they sit
           // 1-2 orders of magnitude above the noise floor, and repeats
           // would multiply the leg into the whole bench budget
-          groupOf.update(name, acc.size / ProbeEvery)
           acc += (if (single) {
             val (t, err) = runOnce(s, fn, dir)
             QResult(name, t, Seq(t), err, memSnapshot(s))
@@ -711,284 +644,13 @@ object Bench {
             val (t, raw, err) = timeQuery(s, fn, dir)
             QResult(name, t, raw, err, memSnapshot(s))
           })
-          if (acc.size % ProbeEvery == 0) series += calibProbeSafe(s)
           // per-query incremental flush: a kill mid-leg keeps every
           // measurement taken so far on disk
           onQuery(acc.toSeq)
         }
       val calibEnd = calibProbeSafe(spark)
-      if (acc.size % ProbeEvery != 0) series += calibEnd
-      val ctx = groupOf.map { case (name, g) =>
-        name -> math.max(
-          series(math.min(g, series.size - 1)),
-          series(math.min(g + 1, series.size - 1)))
-      }.toMap
-      LegRun(acc.toSeq, coldIo, heapHighWaterMb(), calibStart, calibEnd,
-        series.toSeq, ctx)
+      LegRun(acc.toSeq, coldIo, heapHighWaterMb(), calibStart, calibEnd)
     }
-
-    // min-of-two was designed for SESSION-PRESSURE outliers (rerun faster
-    // than in-leg); when the FRESH-session rerun is the slower number,
-    // min-reporting silently keeps the flattering one (r9: span_dedup
-    // 34.6 s in-leg vs 124.8 s rerun read as "34.6 s, settled"). r10's
-    // flag (ratio > 1.5 surfaced in the minimal line) fired correctly but
-    // had no arbitration path — the dispute just moved to the judge. r11
-    // closes the loop IN-ARTIFACT: flagged queries repeat in fresh
-    // sessions until two fresh runs agree within AgreeRatio (cap
-    // MaxAttempts), each attempt carrying its session's calibration
-    // probe, and every flag resolves to a verdict.
-    val RerunFlagRatio = 1.5
-    val AgreeRatio = 1.3
-    val CalibContendedRatio = 1.3
-    val MaxAttempts = 3
-    // a fresh session pays bounded FIXED overhead (codegen compile, DDL,
-    // stream-source setup) that dominates sub-3 s queries and reads as a
-    // 1.5-2× "ratio" at small scale — a REAL fresh-session regression
-    // (the r9 span_dedup class) is tens of seconds. Verdicts treat a
-    // disagreement whose absolute delta is under this floor as settled;
-    // the raw attempts stay in the artifact either way.
-    val FreshCostFloorSec = 2.5
-
-    /** The attempt-index pair agreeing within [[AgreeRatio]] whose smaller
-      * member is smallest — None when no two attempts agree. Indices (not
-      * just the value) come back so the verdict can inspect exactly the
-      * SESSIONS that produced the agreeing measurements.
-      */
-    def agreedPair(attempts: Seq[Double]): Option[(Int, Int)] = {
-      val pairs = for {
-        i <- attempts.indices; j <- i + 1 until attempts.size
-        a = attempts(i); b = attempts(j)
-        if math.max(a, b) <= AgreeRatio * math.max(1e-9, math.min(a, b))
-      } yield (i, j)
-      pairs.sortBy { case (i, j) => math.min(attempts(i), attempts(j)) }.headOption
-    }
-    def agreedValue(attempts: Seq[Double]): Option[Double] =
-      agreedPair(attempts).map { case (i, j) =>
-        math.min(attempts(i), attempts(j))
-      }
-
-    /** Verdict for a rerun query (recorded per query in the artifact):
-      *   - "settled"    — fresh runs corroborate the reported min (first
-      *     rerun within 1.5× of in-leg, or an agreeing fresh pair lands
-      *     within 1.5× of the reported min);
-      *   - "contended"  — fresh runs are reproducibly slower BUT their
-      *     sessions' calibration probes ran >1.3× over the bench-start
-      *     baseline: the machine, not the code (the r10 span_dedup case);
-      *   - "fresh_cost" — fresh runs agree on a slower number on a QUIET
-      *     machine (calib flat): a genuine fresh-session cost the min
-      *     would otherwise hide (the r9 span_dedup case);
-      *   - "unmeasured" — no two fresh runs agreed within 1.3× within the
-      *     attempt cap: the number cannot be trusted either way.
-      */
-    def rerunVerdict(inLeg: Double, info: (Seq[Double], Seq[Double])): String = {
-      val (attempts, calibs) = info
-      val reported = math.min(inLeg, attempts.min)
-      val firstRatio = attempts.head / math.max(1e-9, math.min(inLeg, attempts.head))
-      if (firstRatio <= RerunFlagRatio) "settled"
-      else agreedPair(attempts) match {
-        case Some((i, j)) if {
-          val agreed = math.min(attempts(i), attempts(j))
-          agreed <= RerunFlagRatio * reported ||
-            agreed - reported <= FreshCostFloorSec
-        } => "settled"
-        case Some((i, j)) =>
-          // only the sessions that PRODUCED the agreeing slow measurements
-          // can excuse them: a contended stray attempt elsewhere must not
-          // reclassify a slow value two quiet sessions reproduced. The
-          // robust quiet reference (not raw calib0): a fluke-fast bench-
-          // start probe would otherwise make every session read
-          // "contended" and suppress the flags the posthoc probes consume
-          if (Seq(i, j).exists(x =>
-              calibs(x) > CalibContendedRatio * quietCalibRef))
-            "contended"
-          else "fresh_cost"
-        case None =>
-          // no two attempts agree, but if even the WORST attempt sits
-          // within the fixed-overhead floor of the reported min, there is
-          // nothing material left unmeasured
-          if (attempts.max - reported <= FreshCostFloorSec) "settled"
-          else "unmeasured"
-      }
-    }
-
-    // Leg-level contention invalidation (r13 verdict task 1): when any of a
-    // leg's interleaved calibration probes reads > LegContendedRatio × the
-    // quiet reference, a same-window rerun that "agrees" proves only that
-    // the contention persisted — the r13 sf10 leg settled q_span_dedup at
-    // 285 s with verdict ratio 1.0 while the leg's own calibration read
-    // 2.34 s (~7× quiet): the rerun reproduced the inflated number inside
-    // the same window and the machinery could not see it. A slow query in
-    // such a leg keeps its verdict only when at least one rerun attempt ran
-    // in a QUIET session and corroborated the reported min; everything else
-    // becomes "leg_contended" — counted as unmeasured in the minimal line
-    // and handed to the post-schedule fresh-JVM probe arbitration.
-    val LegContendedRatio = 2.0
-    def legContentionRatio(series: Seq[Double]): Double =
-      if (series.isEmpty) 1.0 else series.max / quietCalibRef
-    def invalidateContendedLeg(
-        series: Seq[Double],
-        inLeg: Map[String, Double],
-        rerun: Map[String, RerunInfo],
-        minSec: Double): Map[String, RerunInfo] =
-      if (legContentionRatio(series) <= LegContendedRatio) rerun
-      else rerun.map { case (n, i) =>
-        val reported = math.min(
-          inLeg.getOrElse(n, i.attempts.min), i.attempts.min)
-        val quietBacked = i.attempts.indices.exists(x =>
-          i.calibs(x) <= CalibContendedRatio * quietCalibRef &&
-            i.attempts(x) <= AgreeRatio * reported + 1e-9)
-        val material = reported >= math.max(minSec, FreshCostFloorSec)
-        n -> (if (quietBacked || !material || i.verdict == "unmeasured") i
-              else i.copy(verdict = "leg_contended"))
-      }
-
-    // eligibility cap: the first fresh pass runs every target once in ONE
-    // shared session, so its cost is the targets' true (quiet) total —
-    // bounded, but not free; 24 covers the r12 contention tier (~10
-    // inflated queries) with margin
-    val MaxRerunTargets = 24
-
-    /** Session-pressure arbiter — eligibility is EXPECTATION-BASED (r12
-      * verdict task 1), not rank-based: a query reruns when its in-leg
-      * time exceeds its committed quiet-box profile (scaled to this box)
-      * by > [[RerunFlagRatio]] AND a material absolute delta — the r12
-      * driver run had ≥ 10 contention-inflated queries but the fixed
-      * top-5 rank cap arbitrated only five, baking ~50-60 s of proven
-      * contention into the headline total. The `topK` slowest above
-      * `minSec` stay eligible as a floor (they catch unprofiled/new
-      * queries and genuine code regressions the profile can't price).
-      *
-      * Flagged queries are re-measured in a FRESH session at leg end; any
-      * whose first rerun disagrees with the in-leg time by > 1.5× repeats
-      * in further fresh sessions (cap [[MaxAttempts]]) until two fresh
-      * runs agree within [[AgreeRatio]] — extra sessions only while
-      * `canSpend` says the wall budget (net of the reserve for the scale
-      * legs) affords them. Every attempt's time and its session's
-      * calibration probe land in the artifact; the reported per-query time
-      * stays the min (the bench measures the code, not accumulated session
-      * state) — but the verdict says what the min means.
-      */
-    def rerunOutliers(
-        dir: String,
-        rs: Iterable[QResult],
-        topK: Int,
-        minSec: Double,
-        legKey: String,
-        calibCtx: Map[String, Double] = Map.empty,
-        canSpend: Double => Boolean = _ => true): Map[String, RerunInfo] = {
-      val byName = rs.map(r => r.name -> r.t).toMap
-      val byRank = rs
-        .filter(r => r.err.isEmpty && r.t >= minSec)
-        .toSeq.sortBy(-_.t).take(topK).map(_.name)
-      val byDeviation = rs
-        .filter(r => r.err.isEmpty && profiled(legKey, r.name).exists { p =>
-          val expected = p * expectScale
-          r.t > RerunFlagRatio * expected && r.t - expected > FreshCostFloorSec
-        })
-        .toSeq.sortBy(-_.t).map(_.name)
-      // contention-window eligibility: the interleaved probes around this
-      // query's group read contended — covers queries the profile can't
-      // price (new gates, first profiled round)
-      val byWindow = rs
-        .filter(r => r.err.isEmpty &&
-          r.t >= math.max(minSec, FreshCostFloorSec) &&
-          calibCtx.getOrElse(r.name, 0.0) > CalibContendedRatio * quietCalibRef)
-        .toSeq.sortBy(-_.t).map(_.name)
-      val targets =
-        (byRank ++ byDeviation ++ byWindow).distinct.take(MaxRerunTargets)
-      if (targets.isEmpty) Map.empty
-      else {
-        val wide = graft.core.Tuning.wideStart(dir, cpus)
-        def freshRerunSession(): SparkSession = {
-          spark.stop()
-          spark = newSession(wide)
-          sinceRecycle = 1
-          spark
-        }
-        // first pass: one fresh session serves every target (bounded cost)
-        val s1 = freshRerunSession()
-        val calib1 = calibProbeSafe(s1)
-        val first = targets.map { n =>
-          n -> (Seq(runOnce(s1, SparkEntry.queries(n), dir)._1), Seq(calib1))
-        }.toMap
-        // agreement loop: only queries whose first rerun disagreed get
-        // further fresh sessions — each attempt its own session + probe
-        val resolved = scala.collection.mutable.Map(first.toSeq: _*)
-        targets.foreach { n =>
-          var (attempts, calibs) = resolved(n)
-          // a disagreement worth more fresh sessions is both RELATIVE
-          // (>1.5×) and MATERIAL (delta past the fixed-overhead floor)
-          def disagreed = {
-            val reported = math.min(byName(n), attempts.head)
-            attempts.head / math.max(1e-9, reported) > RerunFlagRatio &&
-              attempts.head - reported > FreshCostFloorSec
-          }
-          while (disagreed && agreedValue(attempts).isEmpty &&
-              attempts.size < MaxAttempts &&
-              // one more fresh attempt costs ~the query's own time plus
-              // session setup; skip it rather than eat the scale legs
-              canSpend(attempts.head + 15.0)) {
-            val s = freshRerunSession()
-            val c = calibProbeSafe(s)
-            attempts :+= runOnce(s, SparkEntry.queries(n), dir)._1
-            calibs :+= c
-            resolved(n) = (attempts, calibs)
-          }
-        }
-        resolved.map { case (n, (attempts, calibs)) =>
-          n -> RerunInfo(attempts, calibs, rerunVerdict(byName(n), (attempts, calibs)))
-        }.toMap
-      }
-    }
-
-    def applyRerun(rs: Iterable[QResult], rerun: Map[String, RerunInfo])
-        : Iterable[QResult] =
-      rs.map(r => rerun.get(r.name).fold(r)(i =>
-        r.copy(t = math.min(r.t, i.attempts.min))))
-
-    def rerunJson(prefix: String, rerun: Map[String, RerunInfo]): String =
-      if (rerun.isEmpty) ""
-      else {
-        def m(f: RerunInfo => String) = rerun
-          .map { case (k, i) => s"\"" + k + "\":" + f(i) }
-          .mkString("{", ",", "}")
-        s""","${prefix}rerun":${m(_.attempts.head.toString)}""" +
-          s""","${prefix}rerun_attempts":${m(_.attempts.mkString("[", ",", "]"))}""" +
-          s""","${prefix}rerun_calibs":${m(_.calibs.mkString("[", ",", "]"))}""" +
-          s""","${prefix}rerun_verdict":${m(i => "\"" + i.verdict + "\"")}"""
-      }
-
-    def rerunRatios(rs: Iterable[QResult], rerun: Map[String, RerunInfo])
-        : Map[String, Double] = {
-      val byName = rs.map(r => r.name -> r.t).toMap
-      rerun.flatMap { case (n, i) =>
-        byName.get(n).collect {
-          case t1 if t1 > 0 =>
-            n -> math.round(i.attempts.head / t1 * 100) / 100.0
-        }
-      }
-    }
-    def ratioJson(prefix: String, ratios: Map[String, Double]): String =
-      if (ratios.isEmpty) ""
-      else ratios.map { case (k, v) => s"\"" + k + "\":" + v }
-        .mkString(s""","${prefix}rerun_ratio":{""", ",", "}")
-    // the MINIMAL line carries only UNRESOLVED flags: ratio > 1.5 whose
-    // verdict is not "settled"/"contended" — a settled or machine-
-    // attributed number needs no reader attention, a fresh_cost or
-    // unmeasured one does. "leg_contended" flags regardless of ratio: its
-    // defining failure mode is a rerun that AGREES (ratio ~1.0) inside the
-    // same contention window.
-    val rerunFlags = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def flagSlowReruns(
-        leg: String,
-        ratios: Map[String, Double],
-        rerun: Map[String, RerunInfo]): Unit =
-      ratios.foreach { case (n, r) =>
-        val verdict = rerun.get(n).map(_.verdict).getOrElse("settled")
-        if ((r > RerunFlagRatio && verdict != "settled" && verdict != "contended")
-            || verdict == "leg_contended")
-          rerunFlags.update(s"$leg:$n", s"""{"ratio":$r,"verdict":"$verdict"}""")
-      }
 
     // ---- incremental artifact state (r11 post-mortem: the artifact was
     // written ONCE at the end of main, so the driver's rc-124 timeout lost
@@ -999,29 +661,11 @@ object Bench {
     // artifact is always the best current truth.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     val minPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_MIN", "bench_min.json")
-    // r14 verdict task 2: `bench_out.json` is overwritten by every run, so
-    // one lost driver artifact (r13's rc-124 kill) erases the per-query map
-    // forever and PERF degenerates to totals-only (PERF_r14: n_common 0).
-    // Mirror the full artifact under a ROUND-STAMPED name that accumulates
-    // across rounds like BENCH_r*.json: tag from SPARK_GRAFT_ROUND when the
-    // driver passes one, else 1 + the highest committed BENCH_r<N>.json in
-    // the working directory. Only the default artifact path is mirrored —
-    // custom SPARK_GRAFT_BENCH_OUT runs are local iteration and name
-    // themselves.
-    val stampedOutPath: Option[String] =
-      if (outPath != "bench_out.json") None
-      else {
-        val tag = sys.env.get("SPARK_GRAFT_ROUND").map(_.trim).filter(_.nonEmpty)
-          .getOrElse {
-            val re = "BENCH_r(\\d+)\\.json".r
-            val ns = Option(new java.io.File(".").listFiles)
-              .getOrElse(Array.empty[java.io.File])
-              .map(_.getName)
-              .collect { case re(n) => n.toInt }
-            (if (ns.isEmpty) 0 else ns.max + 1).toString
-          }
-        Some(s"bench_out_r$tag.json")
-      }
+    // chosen once, before the first flush: every later flush rewrites the
+    // same mirror
+    val stampedOutPath: Option[String] = stampedOutName(
+      outPath, sys.env.get("SPARK_GRAFT_ROUND"), cpus,
+      Option(new java.io.File(".").list).fold(Set.empty[String])(_.toSet))
     val skippedSteps = scala.collection.mutable.ArrayBuffer.empty[String]
     val degradedSteps = scala.collection.mutable.ArrayBuffer.empty[String]
     // full-artifact json snippets (each ","-prefixed), insertion-ordered
@@ -1031,12 +675,10 @@ object Bench {
     val legErrors = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     val compactLegs = scala.collection.mutable.LinkedHashMap.empty[String, String]
     var primaryResults: Seq[QResult] = Seq.empty
-    var primaryRerun: Map[String, RerunInfo] = Map.empty
     var coldIo = 0.0
     var heapHw = 0L
     var calibStart = 0.0
     var calibEnd = 0.0
-    var primaryCalibSeries: Seq[Double] = Seq.empty
     var complete = false
     @volatile var lastMinimal = ""
     def round3(v: Double) = math.round(v * 1000) / 1000.0
@@ -1054,18 +696,13 @@ object Bench {
       * ~100 kB writes), called after every query / step.
       */
     def flush(): (String, String) = {
-      val results = applyRerun(primaryResults, primaryRerun)
+      val results = primaryResults
       val (qs, raw, errs, mem) = queriesJson(results)
       val total = if (results.nonEmpty) results.map(_.t).sum else 0.0
-      val primaryRatios = rerunRatios(results, primaryRerun)
       val primaryExtras =
         s""","cold_io_s":$coldIo,"heap_high_water_mb":$heapHw""" +
           s""","calib0_s":$calib0""" +
-          s""","calib_s":{"start":$calibStart,"end":$calibEnd}""" +
-          s""","calib_series":${primaryCalibSeries.map(round3).mkString("[", ",", "]")}""" +
-          s""","calib_quiet_ref":${round3(quietCalibRef)}""" +
-          s""","contention_ratio":${round3(legContentionRatio(primaryCalibSeries))}""" +
-          rerunJson("outlier_", primaryRerun) + ratioJson("outlier_", primaryRatios)
+          s""","calib_s":{"start":$calibStart,"end":$calibEnd}"""
       val skipped =
         (if (skippedSteps.isEmpty) ""
          else skippedSteps
@@ -1101,16 +738,8 @@ object Bench {
       val nErrors = results.count(_.err.isDefined) + legErrors.values.sum
       val legTotalsJson = legTotals
         .map { case (k, v) => s""","$k":${round3(v)}""" }.mkString
-      val flagsJson =
-        if (rerunFlags.isEmpty) ""
-        else rerunFlags
-          .map { case (k, v) => s"\"" + k + "\":" + v }
-          .mkString(""","rerun_flags":{""", ",", "}")
-      val nUnmeasured = rerunFlags.values.count(v =>
-        v.contains("\"verdict\":\"unmeasured\"") ||
-          v.contains("\"verdict\":\"leg_contended\""))
       val minimal =
-        s"""{"metric":"total","value":${round3(total)},"unit":"sec","n_queries":${results.size},"n_errors":$nErrors,"n_unmeasured":$nUnmeasured$normJson$legTotalsJson$flagsJson$skipped$budgetJson,"sf":"$sfDir","full":"$outPath"}"""
+        s"""{"metric":"total","value":${round3(total)},"unit":"sec","n_queries":${results.size},"n_errors":$nErrors$normJson$legTotalsJson$skipped$budgetJson,"sf":"$sfDir","full":"$outPath"}"""
       writeFile(minPath, minimal)
       lastMinimal = minimal
       (compact, minimal)
@@ -1205,7 +834,7 @@ object Bench {
     def genEst(dir: String, est: Double): Double =
       if (new java.io.File(dir).isDirectory || !scaleGen) 1.0 else est
     // the 100× legs' budget reservation exists BEFORE anything optional
-    // spends a second — including the primary-leg rerun arbitration
+    // spends a second
     if (!skipLegs) {
       criticalPending.update("ann_recall_fresh", 240.0)
       criticalPending.update("sf10_gen", genEst(sf10Dir, 700))
@@ -1223,18 +852,7 @@ object Bench {
       })
     coldIo = primaryLeg.coldIo; heapHw = primaryLeg.heapHwMb
     calibStart = primaryLeg.calibStart; calibEnd = primaryLeg.calibEnd
-    primaryCalibSeries = primaryLeg.calibSeries
     primaryResults = primaryLeg.results
-    primaryRerun = invalidateContendedLeg(
-      primaryLeg.calibSeries,
-      primaryLeg.results.map(r => r.name -> r.t).toMap,
-      rerunOutliers(sfDir, primaryLeg.results, topK = 5, minSec = 2.0,
-        legKey = "primary",
-        calibCtx = primaryLeg.calibCtx,
-        canSpend = c => elapsedSec + c + criticalReserve <= budgetSec),
-      minSec = 2.0)
-    flagSlowReruns("primary", rerunRatios(
-      applyRerun(primaryResults, primaryRerun), primaryRerun), primaryRerun)
     flush(): Unit
 
     // Scale legs: sf1 = 10× of the primary dir on the scale-critical
@@ -1258,34 +876,10 @@ object Bench {
         }
       }
 
-    case class Leg(
-        results: Iterable[QResult],
-        coldIoS: Double,
-        heapHwMb: Long,
-        calibStartS: Double,
-        calibEndS: Double,
-        calibSeries: Seq[Double],
-        rerun: Map[String, RerunInfo])
-
-    def legJson(prefix: String, dir: String, generator: String,
-        sub: Option[Leg], genSec: Option[Double]): String =
-      sub.map { leg =>
-        val (q, r, e, m) = queriesJson(leg.results)
-        val gen = genSec.map(g => s""","${prefix}_gen_sec":$g""").getOrElse("")
-        val ratios = rerunRatios(leg.results, leg.rerun)
-        flagSlowReruns(prefix, ratios, leg.rerun)
-        s""","${prefix}_dir":"${jsonEscape(dir)}","${prefix}_generator":"$generator"""" +
-          s""","${prefix}_queries":$q,"${prefix}_raw":$r,"${prefix}_errors":$e,"${prefix}_mem":$m""" +
-          s""","${prefix}_cold_io_s":${leg.coldIoS},"${prefix}_heap_high_water_mb":${leg.heapHwMb}""" +
-          s""","${prefix}_calib_s":{"start":${leg.calibStartS},"end":${leg.calibEndS}}""" +
-          s""","${prefix}_calib_series":${leg.calibSeries.map(round3).mkString("[", ",", "]")}""" +
-          s""","${prefix}_contention_ratio":${round3(legContentionRatio(leg.calibSeries))}""" +
-          rerunJson(s"${prefix}_", leg.rerun) + ratioJson(s"${prefix}_", ratios) + gen
-      }.getOrElse("")
-
     /** One scale leg as an incremental step: per-query partial flushes
       * while the leg runs (a kill mid-leg keeps what ran), then the full
-      * legJson — reruns, calibration brackets, gen time — on completion.
+      * record — cold IO, heap peak, calibration brackets, gen time — on
+      * completion.
       */
     def scaledLegStep(
         prefix: String,
@@ -1293,20 +887,19 @@ object Bench {
         generator: String,
         genSec: Option[Double],
         sub: Seq[String],
-        single: Boolean,
-        rerunTopK: Int,
-        rerunMinSec: Double): Option[Leg] =
-      if (!new java.io.File(dir).isDirectory) None
-      else {
-        def record(rs: Iterable[QResult], full: Option[(Leg, String)]): Unit = {
-          val snippet = full.map(_._2).getOrElse {
-            val (q, r, e, m) = queriesJson(rs)
-            s""","${prefix}_dir":"${jsonEscape(dir)}"""" +
-              s""","${prefix}_generator":"$generator","${prefix}_partial":true""" +
-              s""","${prefix}_queries":$q,"${prefix}_raw":$r""" +
-              s""","${prefix}_errors":$e,"${prefix}_mem":$m"""
+        single: Boolean): Unit =
+      if (new java.io.File(dir).isDirectory) {
+        def record(rs: Seq[QResult], done: Option[LegRun]): Unit = {
+          val (q, r, e, m) = queriesJson(rs)
+          val partial = if (done.isEmpty) s""","${prefix}_partial":true""" else ""
+          val full = done.fold("") { leg =>
+            s""","${prefix}_cold_io_s":${leg.coldIo},"${prefix}_heap_high_water_mb":${leg.heapHwMb}""" +
+              s""","${prefix}_calib_s":{"start":${leg.calibStart},"end":${leg.calibEnd}}""" +
+              genSec.fold("")(g => s""","${prefix}_gen_sec":$g""")
           }
-          extraJson.update(prefix, snippet)
+          extraJson.update(prefix,
+            s""","${prefix}_dir":"${jsonEscape(dir)}","${prefix}_generator":"$generator"$partial""" +
+              s""","${prefix}_queries":$q,"${prefix}_raw":$r,"${prefix}_errors":$e,"${prefix}_mem":$m$full""")
           legTotals.update(s"${prefix}_total", rs.map(_.t).sum)
           legErrors.update(prefix, rs.count(_.err.isDefined))
           compactLegs.update(s"${prefix}_queries", compactTimes(rs))
@@ -1314,28 +907,13 @@ object Bench {
         }
         val run = runLeg(
           dir, Some(sub), single, onQuery = rs => record(rs, None))
-        val rerun = invalidateContendedLeg(
-          run.calibSeries,
-          run.results.map(r => r.name -> r.t).toMap,
-          rerunOutliers(dir, run.results, rerunTopK, rerunMinSec,
-            legKey = prefix,
-            calibCtx = run.calibCtx,
-            canSpend = c => elapsedSec + c + criticalReserve <= budgetSec),
-          minSec = rerunMinSec)
-        val leg = Leg(applyRerun(run.results, rerun), run.coldIo, run.heapHwMb,
-          run.calibStart, run.calibEnd, run.calibSeries, rerun)
-        record(leg.results,
-          Some((leg, legJson(prefix, dir, generator, Some(leg), genSec))))
-        Some(leg)
+        record(run.results, Some(run))
       }
 
-    // leg-result slots (filled by the budgeted steps at the bottom of main)
+    // gen-time slots (filled by the budgeted steps at the bottom of main)
     var sf1Gen: Option[Double] = None
     var sf10Gen: Option[Double] = None
     var sf10fGen: Option[Double] = None
-    var sf1Leg: Option[Leg] = None
-    var sf10Leg: Option[Leg] = None
-    var sf10fLeg: Option[Leg] = None
 
     // Per-stage decomposition of the minhash near-dup pipeline on the 100×
     // legs (r9 verdict task: the sf10 trend needed an artifact-recorded
@@ -1704,22 +1282,22 @@ object Bench {
       }
       budgeted("sf10_leg", 300, critical = true,
         degraded = Some((110.0, () => {
-          sf10Leg = scaledLegStep("sf10", sf10Dir, "replicate-noise", sf10Gen,
-            Sf10Cheap, single = true, rerunTopK = 3, rerunMinSec = 5.0)
+          scaledLegStep("sf10", sf10Dir, "replicate-noise", sf10Gen,
+            Sf10Cheap, single = true)
         }))) {
-        sf10Leg = scaledLegStep("sf10", sf10Dir, "replicate-noise", sf10Gen,
-          Sf10Subset, single = true, rerunTopK = 6, rerunMinSec = 5.0)
+        scaledLegStep("sf10", sf10Dir, "replicate-noise", sf10Gen,
+          Sf10Subset, single = true)
       }
       budgeted("sf10f_gen", genEst(sf10fDir, 800), critical = true) {
         sf10fGen = ensureLeg(sf10fDir, 100, fresh = true)
       }
       budgeted("sf10f_leg", 400, critical = true,
         degraded = Some((130.0, () => {
-          sf10fLeg = scaledLegStep("sf10f", sf10fDir, "fresh-content", sf10fGen,
-            Sf10Cheap, single = true, rerunTopK = 3, rerunMinSec = 5.0)
+          scaledLegStep("sf10f", sf10fDir, "fresh-content", sf10fGen,
+            Sf10Cheap, single = true)
         }))) {
-        sf10fLeg = scaledLegStep("sf10f", sf10fDir, "fresh-content", sf10fGen,
-          Sf10Subset, single = true, rerunTopK = 6, rerunMinSec = 5.0)
+        scaledLegStep("sf10f", sf10fDir, "fresh-content", sf10fGen,
+          Sf10Subset, single = true)
       }
       budgeted("sf1_gen", genEst(sf1Dir, 180), critical = true) {
         sf1Gen = ensureLeg(sf1Dir, 10, fresh = false)
@@ -1729,177 +1307,11 @@ object Bench {
         // over the same scale-critical subset — noisier per-query numbers,
         // but the full superlinearity coverage at ~1/4 the wall cost
         degraded = Some((200.0, () => {
-          sf1Leg = scaledLegStep("sf1", sf1Dir, "replicate-noise", sf1Gen,
-            Sf1Subset, single = true, rerunTopK = 5, rerunMinSec = 3.0)
+          scaledLegStep("sf1", sf1Dir, "replicate-noise", sf1Gen,
+            Sf1Subset, single = true)
         }))) {
-        sf1Leg = scaledLegStep("sf1", sf1Dir, "replicate-noise", sf1Gen,
-          Sf1Subset, single = false, rerunTopK = 5, rerunMinSec = 3.0)
-      }
-      // ---- post-schedule fresh-JVM arbitration (r13 verdict task 1,
-      // second half): every flag the in-schedule machinery could not
-      // settle — verdict "unmeasured" (no two fresh runs agreed) or
-      // "leg_contended" (the leg's own calibration window was blown) —
-      // gets a REAL fresh JVM: a spawned QueryProbe child process, gated
-      // on a quiet calibration probe so it cannot run inside the same
-      // contention window that produced the dispute (the r13 failure: the
-      // in-JVM "fresh-session" rerun reproduced 285 s for a ~30 s query
-      // because it ran seconds after the flagged measurement). Probe
-      // results land in "posthoc_probes"; a flag whose probe session read
-      // quiet resolves to verdict "probed" and stops counting as
-      // unmeasured. ----
-      def spawnQueryProbe(
-          queries: Seq[String], dir: String, runs: Int, timeoutSec: Long)
-          : Option[(Double, Double, Map[String, Seq[Double]])] =
-        try {
-          import scala.jdk.CollectionConverters._
-          val javaBin = new java.io.File(new java.io.File(
-            System.getProperty("java.home"), "bin"), "java").getAbsolutePath
-          val jvmArgs = java.lang.management.ManagementFactory
-            .getRuntimeMXBean.getInputArguments.asScala.toSeq
-            .filterNot(a => a.contains("jdwp") || a.startsWith("-agentlib"))
-          val cmd = Seq(javaBin) ++ jvmArgs ++ Seq(
-            "-cp", System.getProperty("java.class.path"),
-            "graft.tools.QueryProbe", queries.mkString(","), dir, runs.toString)
-          val pb = new ProcessBuilder(cmd.asJava)
-          pb.redirectErrorStream(true)
-          val p = pb.start()
-          val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-          val drain = new Thread(() => {
-            val r = new java.io.BufferedReader(
-              new java.io.InputStreamReader(p.getInputStream))
-            try {
-              var l = r.readLine()
-              while (l != null) {
-                lines.synchronized { lines += l }
-                l = r.readLine()
-              }
-            } catch { case _: Throwable => }
-          })
-          drain.setDaemon(true)
-          drain.start()
-          if (!p.waitFor(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)) {
-            p.destroyForcibly(): Unit
-            System.err.println(
-              s"bench: posthoc probe for $dir timed out after ${timeoutSec}s")
-            return None
-          }
-          drain.join(2000)
-          val json = lines.synchronized {
-            lines.reverse.find(_.contains("[probe-json]"))
-          }.getOrElse(return None)
-          def num(key: String): Double = {
-            val m = java.util.regex.Pattern
-              .compile("\"" + key + "\"\\s*:\\s*(-?[0-9.eE+]+)").matcher(json)
-            if (m.find()) m.group(1).toDouble else -1.0
-          }
-          val qm = java.util.regex.Pattern
-            .compile("\"(q_[A-Za-z0-9_]+)\"\\s*:\\s*\\[([^\\]]*)\\]")
-            .matcher(json)
-          val res = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-          while (qm.find()) res.update(qm.group(1),
-            qm.group(2).split(',').toSeq.filter(_.nonEmpty).map(_.trim.toDouble))
-          Some((num("calib"), num("calib_end"), res.toMap))
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"bench: posthoc probe spawn failed: $e")
-            None
-        }
-      // r14 verdict task 4: the full 2-run posthoc step was skipped on
-      // budget in the r14 driver run, leaving the 100×-leg "unmeasured"
-      // flags (the round's most interesting disputes) standing while
-      // cheaper optional steps had already run. The step now has a
-      // DEGRADED single-run form, processes legs scale-first (sf10f/sf10
-      // carry the scale evidence; primary flags are the cheapest to
-      // re-measure any other way), and falls back per leg from 2 runs to
-      // 1 before skipping that leg.
-      def posthocProbeStep(maxRuns: Int): Unit = {
-        val legDirs = Map(
-          "primary" -> sfDir, "sf1" -> sf1Dir,
-          "sf10" -> sf10Dir, "sf10f" -> sf10fDir)
-        val legPriority =
-          Map("sf10f" -> 0, "sf10" -> 1, "sf1" -> 2, "primary" -> 3)
-        val targets = rerunFlags.toSeq.collect {
-          case (key, v)
-              if (v.contains("\"verdict\":\"unmeasured\"") ||
-                v.contains("\"verdict\":\"leg_contended\"")) &&
-                key.contains(":") =>
-            val Array(leg, q) = key.split(":", 2)
-            (leg, q)
-        }.filter { case (leg, _) =>
-          legDirs.get(leg).exists(d => new java.io.File(d).isDirectory)
-        }
-        if (targets.nonEmpty) {
-          // one quiet gate for the whole step: contention is box-global.
-          // Bounded wait — if the box never goes quiet the probes would be
-          // just as unarbitrable as the numbers they dispute; record the
-          // gate readings and leave the flags standing.
-          var gate = calibProbeSafe(spark)
-          var waits = 0
-          while (gate > CalibContendedRatio * quietCalibRef && waits < 8 &&
-              elapsedSec + 60 < budgetSec) {
-            Thread.sleep(20000)
-            gate = calibProbeSafe(spark)
-            waits += 1
-          }
-          val probeJson = scala.collection.mutable.LinkedHashMap.empty[String, String]
-          probeJson.update("gate",
-            s"""{"calib":${round3(gate)},"waits":$waits,"quiet_ref":${round3(quietCalibRef)}}""")
-          if (gate <= CalibContendedRatio * quietCalibRef) {
-            targets.groupBy(_._1).toSeq
-              .sortBy { case (leg, _) => legPriority.getOrElse(leg, 9) }
-              .foreach { case (leg, group) =>
-              val dir = legDirs(leg)
-              val qs = group.map(_._2).distinct
-              // child budget: startup + calibration ~60 s, then each
-              // query's profiled expectation (or 60 s floor) × runs × 3
-              def timeoutFor(r: Int) = math.min(600L, 60L + qs.map(q =>
-                math.max(60.0, profiled(leg, q).getOrElse(30.0) * expectScale * 3)
-              ).sum.toLong * r)
-              // per-leg fallback: a single-run probe that fits the budget
-              // beats leaving a 100×-leg dispute unarbitrated
-              val runs =
-                if (elapsedSec + timeoutFor(maxRuns) <= budgetSec) maxRuns
-                else if (maxRuns > 1 && elapsedSec + timeoutFor(1) <= budgetSec) {
-                  degradedSteps += s"posthoc_probe_$leg"
-                  1
-                } else 0
-              if (runs > 0)
-                spawnQueryProbe(qs, dir, runs = runs,
-                  timeoutSec = timeoutFor(runs))
-                  .foreach { case (calib, calibEnd, res) =>
-                    val quiet = math.max(calib, calibEnd) <=
-                      CalibContendedRatio * quietCalibRef && calib > 0
-                    res.foreach { case (q, ts) =>
-                      if (ts.nonEmpty) {
-                        probeJson.update(s"$leg:$q",
-                          s"""{"runs":${ts.map(round3).mkString("[", ",", "]")},""" +
-                            s""""calib":${round3(calib)},"calib_end":${round3(calibEnd)},"quiet":$quiet}""")
-                        rerunFlags.get(s"$leg:$q").foreach { old =>
-                          val rm = java.util.regex.Pattern
-                            .compile("\"ratio\"\\s*:\\s*(-?[0-9.eE+]+)").matcher(old)
-                          val ratio = if (rm.find()) rm.group(1) else "0"
-                          val wm = java.util.regex.Pattern
-                            .compile("\"verdict\"\\s*:\\s*\"([a-z_]+)\"").matcher(old)
-                          val was = if (wm.find()) wm.group(1) else "?"
-                          if (quiet) rerunFlags.update(s"$leg:$q",
-                            s"""{"ratio":$ratio,"verdict":"probed","was":"$was","probe_s":${round3(ts.min)}}""")
-                        }
-                      }
-                    }
-                    flush(): Unit
-                  }
-              else skippedSteps += s"posthoc_probe_$leg"
-            }
-          }
-          extraJson.update("posthoc_probes", probeJson
-            .map { case (k, v) => s"\"" + k + "\":" + v }
-            .mkString(""","posthoc_probes":{""", ",", "}"))
-          flush(): Unit
-        }
-      }
-      budgeted("posthoc_probes", 240,
-        degraded = Some((100.0, () => posthocProbeStep(1)))) {
-        posthocProbeStep(2)
+        scaledLegStep("sf1", sf1Dir, "replicate-noise", sf1Gen,
+          Sf1Subset, single = false)
       }
       budgeted("ann_recall_primary", 180) {
         annRecall(freshSession(sfDir), sfDir).foreach(j =>

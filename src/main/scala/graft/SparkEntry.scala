@@ -471,7 +471,7 @@ object SparkEntry {
     },
 
     // #7 get_interval_overlaps_nd (2-D: date × price, keyed) — exercises the
-    // dim-1 sweep + treap prefix-max count path (Intervals.overlapFlags2D),
+    // dim-1 sweep + treap prefix-max count path (Intervals.overlapFlagsSweep),
     // not the pair self-join
     "q_interval_overlap_2d" -> { (s, dir) =>
       val iv = s.read

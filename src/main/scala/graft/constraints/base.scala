@@ -137,15 +137,6 @@ abstract class ValueConstraint[A] extends Constraint {
   protected final def target(spark: SparkSession): A =
     refValue.getOrElse(retrieveMemo(spark, isFactual = false)._1)
 
-  /** Plans of the factual retrieval (populated once `factual` has run). */
-  protected final def factualPlans(spark: SparkSession): Seq[String] =
-    memo.get((System.identityHashCode(spark), true))
-      .map(p => PlanCapture.render(p._2)).getOrElse(Seq.empty)
-
-  protected final def targetPlans(spark: SparkSession): Seq[String] =
-    memo.get((System.identityHashCode(spark), false))
-      .map(p => PlanCapture.render(p._2)).getOrElse(Seq.empty)
-
   protected final def targetPrefix: String =
     ref2.map(r => s"${r.describe}'s ").getOrElse("")
 

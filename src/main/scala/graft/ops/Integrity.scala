@@ -120,28 +120,6 @@ object Integrity {
       .drop("dj_v", "dj_n", "dj_s", "dj_q")
   }
 
-  /** Exact order statistic at 1-based ranks `r1` and `r2` of `valueCol`
-    * (decimal), via the engine's distinct-aggregate + distributed prefix
-    * sum (no global sort, no unpartitioned window): value at rank r is the
-    * least v whose running duplicate-count reaches r. One action.
-    */
-  private def valuesAtRanks(
-      df: DataFrame,
-      valueCol: String,
-      r1: Long,
-      r2: Long): (java.math.BigDecimal, java.math.BigDecimal) = {
-    val counts = graft.core.Blocks.checkpoint(
-      df.groupBy(col(valueCol).as("dj_ov")).agg(count(lit(1)).as("dj_cnt")))
-    try {
-      val (running, _) =
-        graft.ops.CumSum.withRunningSums(counts, "dj_ov", Seq("dj_cnt"), Seq("dj_cum"))
-      val row = running.agg(
-        min(when(col("dj_cum") >= r1, col("dj_ov"))).as("v1"),
-        min(when(col("dj_cum") >= r2, col("dj_ov"))).as("v2")).head()
-      (row.getDecimal(0), row.getDecimal(1))
-    } finally graft.core.Blocks.release(counts)
-  }
-
   /** Rank selection over a PRE-BUILT (dj_ov decimal, dj_cnt long)
     * distinct-value frame with CALLER-SUPPLIED bucket boundaries (the
     * fused q_mad_outliers path: boundaries reuse only shapes load

@@ -285,16 +285,16 @@ object Intervals {
       .distinct()
   }
 
-  /** 2-D violating keys WITHOUT the pair self-join — the dim-1 sweep the
-    * 1-D path got in round 7, extended to two dimensions (reference
-    * `get_interval_overlaps_nd`, `db_access.py:316-472`, N=2 — the
-    * `DateNoOverlap2d` shape). Same contract as [[overlapFlags1D]]: returns
-    * the exact distinct key tuples the self-join would flag, but a key
-    * holding k mutually-dim-1-overlapping rectangles costs O(k log k) sort +
-    * stab instead of O(k²) join output.
+  /** N-D (N >= 2) violating keys WITHOUT the pair self-join — the dim-1
+    * sweep the 1-D path got in round 7, extended to more dimensions
+    * (reference `get_interval_overlaps_nd`, `db_access.py:316-472`; N=2 is
+    * the `DateNoOverlap2d` shape). Same contract as [[overlapFlags1D]]:
+    * returns the exact distinct key tuples the self-join would flag, but a
+    * key holding k mutually-dim-1-overlapping rectangles costs O(k log k)
+    * sort + stab instead of O(k²) join output.
     *
-    * Decomposition (pre-aggregated to one row per distinct
-    * (key, s1, e1, s2, e2) rectangle, carrying its multiplicity):
+    * Decomposition, spelled out for N = 2 (pre-aggregated to one row per
+    * distinct (key, s1, e1, s2, e2) rectangle, carrying its multiplicity):
     *
     *   - scenario 1 (whole-row duplicates — the column guard in
     *     [[overlapResult]] makes rows == rectangles): multiplicity >= 2
@@ -322,26 +322,13 @@ object Intervals {
     *     own corner in both dimensions (either order of such a pair is
     *     admissible — processing order inside the tie must not matter).
     *
+    * That clean-key plan is [[sweep2DFlags]]. For N >= 3 the routing is the
+    * same and clean keys take the flag-early linear active-scan instead
+    * ([[sweepNDFlags]]).
+    *
     * Memory: the treap holds only ACTIVE rectangles (dim-1 reach spans the
     * probe) — worst case O(k) for a fully-dim-1-overlapping hot key, never
     * O(k²); a found violation flags the key and skips its remaining rows.
-    */
-  private[graft] def overlapFlags2D(
-      spark: SparkSession,
-      ref: DataRef,
-      keyColumns: Seq[String],
-      startColumns: Seq[String],
-      endColumns: Seq[String],
-      endIncluded: Boolean): DataFrame =
-    overlapFlagsSweep(spark, ref, keyColumns, startColumns, endColumns, endIncluded)
-
-  /** The swept N-D (N >= 2) flag plan: the [[overlapFlags2D]] routing
-    * generalized to any dimensionality — scenario-1 duplicates flag keys
-    * directly off the rectangle pre-aggregate, NULL-start rectangles drop,
-    * NULL-END keys route to the exact pair join restricted to their own
-    * rows, and clean keys take the dim-1 sweep: the treap stab for N == 2
-    * ([[sweep2DFlags]]), the flag-early linear active-scan for N >= 3
-    * ([[sweepNDFlags]]).
     */
   private[graft] def overlapFlagsSweep(
       spark: SparkSession,
@@ -397,7 +384,7 @@ object Intervals {
     } finally graft.core.Blocks.release(rects)
   }
 
-  /** The clean-key 2-D sweep plan (see [[overlapFlags2D]]): one hash
+  /** The clean-key 2-D sweep plan (see [[overlapFlagsSweep]]): one hash
     * exchange on the keys, one within-partition sort by (keys, s1, s2), one
     * streaming mapPartitions — no join anywhere (PlanSpec pins this).
     * `clean` must hold one row per distinct rectangle, all coordinates and

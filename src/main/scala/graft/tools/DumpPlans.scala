@@ -381,7 +381,7 @@ object DumpPlans {
           nClusters = 64, lloydIters = 0, corpusSize = Some(1), probes = 2)
       })
 
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("/root/repo/PLANS.md"), sb.toString)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get("PLANS.md"), sb.toString)
     println("[plans] wrote PLANS.md")
     spark.stop()
   }

@@ -174,7 +174,7 @@ class IntervalSpec extends AnyFunSuite {
           spark, ref, Seq("id1"), Seq("s1", "s2"), Seq("e1", "e2"), endIncluded)
         .select(col("id1")).distinct().collect().map(keyOf).toSet
       val swept = Intervals
-        .overlapFlags2D(
+        .overlapFlagsSweep(
           spark, ref, Seq("id1"), Seq("s1", "s2"), Seq("e1", "e2"), endIncluded)
         .collect().map(keyOf).toSet
       assert(swept == joined,
@@ -209,7 +209,7 @@ class IntervalSpec extends AnyFunSuite {
           spark, ref, Seq("id1"), Seq("s1", "s2"), Seq("e1", "e2"), endIncluded)
         .select(col("id1")).distinct().collect().map(keyOf).toSet
       val swept = Intervals
-        .overlapFlags2D(
+        .overlapFlagsSweep(
           spark, ref, Seq("id1"), Seq("s1", "s2"), Seq("e1", "e2"), endIncluded)
         .collect().map(keyOf).toSet
       assert(swept == joined,

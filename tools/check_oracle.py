@@ -32,7 +32,7 @@ fails = []
 for name in sorted(oracle):
     spark_dir = f"{outdir}/{name}"
     if not os.path.isdir(spark_dir):
-        print(f"{name}: MISSING spark output"); fails.append(name); continue
+        print(f"{name}: MISSING spark output", flush=True); fails.append(name); continue
     got = pd.read_parquet(spark_dir)
     want = con.execute(oracle[name]).df()
     cg, cw = canon(got), canon(want)
@@ -40,11 +40,11 @@ for name in sorted(oracle):
     rows_ok = len(cg) == len(cw)
     hash_ok = schema_ok and rows_ok and cg.equals(cw)
     status = "OK" if hash_ok else "FAIL"
-    print(f"{name}: {status} (rows {len(cg)} vs {len(cw)}, cols {list(cg.columns)} vs {list(cw.columns)})")
+    print(f"{name}: {status} (rows {len(cg)} vs {len(cw)}, cols {list(cg.columns)} vs {list(cw.columns)})", flush=True)
     if not hash_ok:
         fails.append(name)
         if schema_ok and rows_ok:
             diff = (cg != cw).any(axis=1)
-            print("  first diffs:\n", pd.concat([cg[diff].head(3), cw[diff].head(3)], keys=["got","want"]).to_string()[:2000])
+            print("  first diffs:\n", pd.concat([cg[diff].head(3), cw[diff].head(3)], keys=["got","want"]).to_string()[:2000], flush=True)
 print(f"\n{len(oracle)-len(fails)}/{len(oracle)} OK; failures: {fails}")
 sys.exit(1 if fails else 0)
