@@ -1382,7 +1382,9 @@ object Bench {
     // actually captures) while the parent is alive, waits for the parent
     // to exit (i.e. after the footer is flushed), and only then emits the
     // sidecar line — making the minimal JSON the last line of the captured
-    // stream regardless of what sbt appends. Falls back silently if /proc
+    // stream regardless of what sbt appends. The dup opens for append: when
+    // the parent's stdout is a regular file, a plain `>` would truncate it
+    // and write over the log from offset 0. Falls back silently if /proc
     // or a parent is unavailable; the sidecar file remains the contract.
     try {
       val abs = java.nio.file.Paths.get(minPath).toAbsolutePath.toString
@@ -1390,7 +1392,7 @@ object Bench {
       val target = self.parent().map[java.lang.Long](p => p.pid()).orElse(self.pid())
       new ProcessBuilder(
         "/bin/bash", "-c",
-        s"exec 3>/proc/$target/fd/1 || exit 0; " +
+        s"exec 3>>/proc/$target/fd/1 || exit 0; " +
           s"while kill -0 $target 2>/dev/null; do sleep 0.2; done; " +
           s"cat '$abs' >&3")
         .redirectOutput(ProcessBuilder.Redirect.DISCARD)

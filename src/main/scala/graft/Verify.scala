@@ -19,7 +19,8 @@ object Verify {
       // affects timing
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         graft.core.Tuning.wideStart(sfDir, cpus.toInt))
-      // bound dead-shuffle accumulation across the 68-query session (see Bench)
+      // bound dead-shuffle accumulation across the one-session run of every
+      // gate (see Bench)
       .config("spark.cleaner.periodicGC.interval", "5min")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -42,8 +43,8 @@ object Verify {
       }
       finally {
         spark.catalog.clearCache() // free operator-internal caches
-        // and the pipelines' tracked checkpoints — 66 queries' worth of
-        // dead blocks otherwise accumulate in one session
+        // and the pipelines' tracked checkpoints — every gate's dead
+        // blocks otherwise accumulate in one session
         graft.core.Blocks.releaseAll()
       }
     }

@@ -48,7 +48,4 @@ final case class DataRef(
     val condPart = condition.map(c => s" | ${c.render}").getOrElse("")
     s"$name$colPart$condPart"
   }
-
-  def withMergedCondition(extra: Condition): DataRef =
-    copy(condition = Condition.merge(condition, Some(extra)))
 }

@@ -995,6 +995,8 @@ object Corpus {
       .groupBy("dj_w")
       .agg(count(lit(1)).as("dj_c"))
     val top = uc.orderBy(col("dj_c").desc, col("dj_w").asc).limit(topK)
+    // ≤ topK rows: the single-partition window ranks the limited top
+    // vocabulary, never corpus-scaled data
     val ranked = top.withColumn(
       "dj_rank",
       row_number().over(

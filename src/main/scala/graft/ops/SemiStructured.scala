@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Semi-structured (JSON) column operators: typed extraction via the
@@ -10,14 +10,6 @@ import org.apache.spark.sql.functions._
   * extraction and an aggregate for the health signal.
   */
 object SemiStructured {
-
-  /** Parse a JSON string column against a DDL schema (e.g.
-    * `"k INT, tags ARRAY<STRING>"`). Malformed documents yield a struct
-    * of NULL fields (PERMISSIVE semantics) — they stay visible rather
-    * than killing the task.
-    */
-  def parseJson(jsonCol: Column, ddl: String): Column =
-    from_json(jsonCol, org.apache.spark.sql.types.StructType.fromDDL(ddl))
 
   /** Adds `parsed` (typed struct) and `json_ok` (false for malformed
     * rows) next to the raw column. Malformed detection uses the standard

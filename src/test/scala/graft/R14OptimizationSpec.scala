@@ -147,29 +147,100 @@ class R14OptimizationSpec extends AnyFunSuite {
         "text", "doc_id", threshold = 0.5))
   }
 
+  /** A generated CumSum input: `kind` picks the order-key type (0 long,
+    * 1 double, 2 date), `keys` are distinct (at most one NULL), `c1`/`c2`
+    * are nullable signed values, `parts` > 0 repartitions the frame.
+    */
+  private final case class CumCase(
+      kind: Int,
+      keys: Seq[Option[Long]],
+      c1: Seq[Option[Long]],
+      c2: Seq[Option[Long]],
+      numBuckets: Int,
+      parts: Int)
+
+  private val valueGen: Gen[Option[Long]] =
+    Gen.frequency(1 -> Gen.const(None), 5 -> Gen.choose(-1000L, 1000L).map(Some(_)))
+
+  private val cumCaseGen: Gen[CumCase] = for {
+    kind <- Gen.oneOf(0, 1, 2)
+    n <- Gen.frequency(1 -> Gen.const(0), 1 -> Gen.const(1), 6 -> Gen.choose(2, 60))
+    layout <- Gen.oneOf("spread", "dense", "outlier", "oneProxy")
+    start <- Gen.choose(-5000L, 5000L)
+    spread <- Gen.pick(n, -20000L to 20000L).map(_.toSeq)
+    withNull <- Gen.frequency(4 -> false, 1 -> true)
+    keys = layout match {
+      case "spread" => spread
+      case "dense" => (0 until n).map(start + _)
+      // a far outlier: every other key shares the low buckets
+      case "outlier" => (0 until n).map(i => if (i == n - 1) 90000L else start + i)
+      // long keys past 2^53 collapse to ONE double proxy, so every key
+      // lands in one bucket; the other types keep the dense layout
+      case _ => (0 until n).map(i => if (kind == 0) (1L << 60) + i else start + i)
+    }
+    nullable = if (withNull && n > 0) None +: keys.tail.map(Some(_)) else keys.map(Some(_))
+    c1 <- Gen.listOfN(n, valueGen)
+    c2 <- Gen.listOfN(n, valueGen)
+    numBuckets <- Gen.choose(2, n + 5)
+    parts <- Gen.oneOf(0, 1, 3, 7)
+  } yield CumCase(kind, nullable, c1, c2, numBuckets, parts)
+
+  private def cumFrame(c: CumCase): DataFrame = {
+    val (dt, key): (DataType, Long => Any) = c.kind match {
+      case 0 => (LongType, k => java.lang.Long.valueOf(k))
+      case 1 => (DoubleType, k => java.lang.Double.valueOf(k / 4.0))
+      case _ => (DateType, k => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(k)))
+    }
+    def boxed(v: Option[Long]): Any = v.map(java.lang.Long.valueOf).orNull
+    val rows = c.keys.indices.map(i =>
+      Row(c.keys(i).map(key).orNull, boxed(c.c1(i)), boxed(c.c2(i))))
+    val df = spark.createDataFrame(java.util.List.of(rows: _*), StructType(Seq(
+      StructField("dj_v", dt), StructField("c1", LongType), StructField("c2", LongType))))
+    if (c.parts > 0) df.repartition(c.parts) else df
+  }
+
+  /** The split and fused running-sum + successor plans of `df`, each as
+    * its (order, r1, r2, next) row set, with the fused plan's totals and
+    * span next to the split plan's totals and the frame's exact span.
+    */
+  private def cumPaths(df: DataFrame, numBuckets: Int) = {
+    def rowSet(frame: DataFrame) = frame.select("dj_v", "r1", "r2", "nxt")
+      .collect().map(r => (Option(r.get(0)), Option(r.get(1)), Option(r.get(2)),
+        Option(r.get(3)))).toSet
+    val (runA, totalsA) = CumSum.withRunningSums(
+      df, "dj_v", Seq("c1", "c2"), Seq("r1", "r2"), numBuckets = numBuckets)
+    val unfused = rowSet(CumSum.withNextValue(runA, "dj_v", "nxt", numBuckets = numBuckets))
+    val rn = CumSum.withRunningSumsNext(
+      df, "dj_v", Seq("c1", "c2"), Seq("r1", "r2"), "nxt", numBuckets = numBuckets)
+    val span = df.agg(min("dj_v"), max("dj_v")).head()
+    (unfused, rowSet(rn.frame), totalsA, rn.totals,
+      (Option(span.get(0)), Option(span.get(1))), (rn.minOrder, rn.maxOrder))
+  }
+
   test("withRunningSumsNext ≡ withRunningSums + withNextValue, span exact") {
     import spark.implicits._
     val counts = (1 to 500)
       .map(i => (i.toLong * 3, (i % 7 + 1).toLong, (i % 3).toLong))
       .toDF("dj_v", "c1", "c2")
-    val (runA, totalsA) = CumSum.withRunningSums(
-      counts, "dj_v", Seq("c1", "c2"), Seq("r1", "r2"), numBuckets = 16)
-    val unfused = CumSum.withNextValue(runA, "dj_v", "nxt", numBuckets = 16)
-      .select("dj_v", "r1", "r2", "nxt")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        if (r.isNullAt(3)) -1L else r.getLong(3))).toSet
-    val rn = CumSum.withRunningSumsNext(
-      counts, "dj_v", Seq("c1", "c2"), Seq("r1", "r2"), "nxt", numBuckets = 16)
-    val fused = rn.frame.select("dj_v", "r1", "r2", "nxt")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        if (r.isNullAt(3)) -1L else r.getLong(3))).toSet
-    assert(rn.totals == totalsA)
+    val (unfused, fused, totalsA, totals, _, (minO, maxO)) = cumPaths(counts, 16)
+    assert(totals == totalsA)
     assert(fused == unfused)
-    assert(rn.minOrder.contains(3L) && rn.maxOrder.contains(1500L))
+    assert(minO.contains(3L) && maxO.contains(1500L))
     // empty input keeps schema + empty bounds
     val e = CumSum.withRunningSumsNext(
       counts.where(lit(false)), "dj_v", Seq("c1"), Seq("r1"), "nxt")
     assert(e.frame.count() == 0 && e.minOrder.isEmpty && e.maxOrder.isEmpty)
+    // generated: long/double/date keys, NULL and negative values, one
+    // bucket, 0/1/many rows, 2 to above-row-count buckets, repartitioned
+    val prop = Prop.forAllNoShrink(cumCaseGen) { c =>
+      val (unfused, fused, totalsA, totals, span, fusedSpan) =
+        cumPaths(cumFrame(c), c.numBuckets)
+      (fused == unfused && totals == totalsA && fusedSpan == span) :|
+        s"only-fused=${fused -- unfused} only-split=${unfused -- fused} " +
+          s"totals=$totals/$totalsA span=$fusedSpan/$span case=$c"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(100), prop)
+    assert(res.passed, Pretty.pretty(res))
   }
 
   test("correlationMatrix: long path ≡ decimal fallback at the 3e9 boundary") {

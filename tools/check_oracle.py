@@ -25,7 +25,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
         if isinstance(v, np.floating):
             return repr(float(v))
         return str(v)
-    out = df.applymap(cell)
+    out = df.map(cell)
     return out.sort_values(by=list(out.columns)).reset_index(drop=True)
 
 fails = []
