@@ -52,7 +52,7 @@ private[graft] object DedupGates {
 
     // exact-substring span dedup (window-fingerprint flavor): per-doc
     // duplicated-token coverage from non-first occurrences of 8-token
-    // windows, span union via per-doc sweep
+    // windows, the union of their spans
     Gate("q_span_dedup", { (s, dir) =>
       graft.ops.Dedup
         .duplicatedSpans(

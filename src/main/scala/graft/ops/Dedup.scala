@@ -58,8 +58,7 @@ object Dedup {
     * scale — birthday collisions become expected around ~5e9 distinct
     * paragraphs/windows (a realistic 100 TB corpus), silently merging
     * unrelated text. Two independent 64-bit halves push that to ~1e19
-    * distinct keys while keeping the md5 flavor's 13× cost win: the struct
-    * is 16 bytes on the shuffle (vs md5's 32-char string) and both halves
+    * distinct keys: the struct is 16 bytes on the shuffle and both halves
     * are the codegen'd xxhash64 kernel. Grouping/joining on the struct is
     * exactly as cheap as on a long2 key.
     */
@@ -920,19 +919,14 @@ object Dedup {
       textCol: String,
       idCol: String,
       delimiter: String = "\n",
-      minParagraphChars: Int = 1,
-      md5Flavor: Boolean = false): DataFrame = {
+      minParagraphChars: Int = 1): DataFrame = {
     val parts = spread(df.where(col(textCol).isNotNull).select(col(idCol), col(textCol)))
       .select(
         col(idCol),
         posexplode(split(col(textCol), java.util.regex.Pattern.quote(delimiter))))
       .toDF(idCol, "dj_pos", "dj_para")
-    // fingerprint is a grouping key only (never output): fast flavor is the
-    // 128-bit two-seed xxhash64 struct (collision-safe at corpus scale —
-    // see fp128); md5 stays behind the flag for plain-SQL re-derivation
     val keyed = parts
-      .withColumn("dj_fp",
-        if (md5Flavor) md5(col("dj_para").cast("binary")) else fp128(col("dj_para")))
+      .withColumn("dj_fp", fp128(col("dj_para")))
       .withColumn("dj_dedupable", length(col("dj_para")) >= minParagraphChars)
     val firsts = keyed
       .where(col("dj_dedupable"))
@@ -943,13 +937,18 @@ object Dedup {
       .where(!col("dj_dedupable") ||
         struct(col(idCol), col("dj_pos")) === col("dj_first"))
       .groupBy(idCol)
-      .agg(
-        concat_ws(
-          delimiter,
-          transform(
-            array_sort(collect_list(struct(col("dj_pos"), col("dj_para")))),
-            s => s.getField("dj_para"))).as(textCol))
+      .agg(inPosOrder(delimiter, "dj_para").as(textCol))
   }
+
+  /** The per-group aggregate joining `partCol` with `delimiter` in `dj_pos`
+    * order — the ordered reassembly of a posexploded document.
+    */
+  private def inPosOrder(delimiter: String, partCol: String): Column =
+    concat_ws(
+      delimiter,
+      transform(
+        array_sort(collect_list(struct(col("dj_pos"), col(partCol)))),
+        s => s.getField(partCol)))
 
   /** Boilerplate-line removal (the CCNet/C4 "strip lines repeated across
     * many documents" pass — navbars, cookie banners, license footers): a
@@ -977,8 +976,7 @@ object Dedup {
       delimiter: String = "\n",
       minDocFraction: Double = 0.5,
       minDocs: Long = 2,
-      groupCol: Option[String] = None,
-      md5Flavor: Boolean = false): DataFrame = {
+      groupCol: Option[String] = None): DataFrame = {
     require(minDocFraction > 0 && minDocFraction <= 1,
       s"minDocFraction must lie in (0, 1]: $minDocFraction")
     require(minDocs >= 2, s"minDocs must be >= 2: $minDocs")
@@ -986,17 +984,13 @@ object Dedup {
     val g = groupCol.map(col).getOrElse(lit(""))
     val base = spread(
       df.where(col(textCol).isNotNull).select(keep :+ col(textCol): _*))
-    // fingerprint is a grouping key only (never output): fast flavor is the
-    // 128-bit two-seed xxhash64 struct (collision-safe at corpus scale —
-    // see fp128); md5 stays behind the flag for plain-SQL re-derivation
     val units = base
       .select(
         col(idCol),
         g.as("dj_grp"),
         posexplode(split(col(textCol), java.util.regex.Pattern.quote(delimiter))))
       .toDF(idCol, "dj_grp", "dj_pos", "dj_unit")
-      .withColumn("dj_fp",
-        if (md5Flavor) md5(col("dj_unit").cast("binary")) else fp128(col("dj_unit")))
+      .withColumn("dj_fp", fp128(col("dj_unit")))
     // tiny: one row per group (one row total when ungrouped) — broadcast
     val groupDocs = broadcast(
       base.groupBy(g.as("dj_grp")).agg(count(lit(1)).as("dj_group_docs")))
@@ -1011,11 +1005,7 @@ object Dedup {
     val keptAgg = kept
       .groupBy(idCol)
       .agg(
-        concat_ws(
-          delimiter,
-          transform(
-            array_sort(collect_list(struct(col("dj_pos"), col("dj_unit")))),
-            s => s.getField("dj_unit"))).as("dj_text"),
+        inPosOrder(delimiter, "dj_unit").as("dj_text"),
         count(lit(1)).as("dj_kept"))
     units
       .groupBy(idCol)
@@ -1303,84 +1293,71 @@ object Dedup {
       .unionByName(docs.join(reps, Seq(idCol), "left_semi"))
   }
 
-  /** Exact-substring duplication stats per document (the window-fingerprint
-    * approximation of suffix-array exact-substring dedup — Lee et al. 2022,
-    * "Deduplicating Training Data Makes Language Models Better", public
-    * arXiv:2107.06499): every `windowTokens`-token window of the normalized
-    * token stream is fingerprinted; a window occurrence that is not the
-    * corpus-wide FIRST occurrence of its fingerprint (ordered by (id,
-    * position)) marks its token span as duplicated. Returns one row per
-    * non-null-text document: (`idCol`, `n_tokens`, `dup_tokens` = size of
-    * the union of flagged spans, `dup_frac` = dup_tokens / n_tokens) — the
-    * signal pipelines threshold to drop or trim bulk-copied text that
-    * document-level near-dup passes miss (long quotes, syndicated
-    * boilerplate inside otherwise-unique pages).
+  /** Shared window-fingerprint builder of the exact-substring family:
+    * (tokenized documents `(idCol, dj_toks, dj_n)`, and their window
+    * fingerprints `(idCol, dj_fps)`, where element i is the window starting
+    * at token i).
     *
-    * Scale shape: windows are a linear explode (one row per token, same
-    * order as any shingling pass); first-occurrence is the skew-safe
-    * partial-aggregated `groupBy(fp).agg(min(struct(id, pos)))` — map-side
-    * combine absorbs a boilerplate window repeated across half the corpus
-    * BEFORE the shuffle (never a window-function over fingerprint, which
-    * funnels every copy through one reducer). The span-union sweep is a
-    * per-DOCUMENT window over flagged starts only — partition count =
-    * document count, bounded by document length, no global ordering
-    * anywhere. Three shuffles total (fingerprint agg, fingerprint join,
-    * doc-id sweep).
+    * NULL ids and NULL texts are dropped (the Corpus-ops policy): a NULL id
+    * has no stable identity to anchor the (id, pos) first-occurrence order —
+    * min(struct) would otherwise let a null-id occurrence absorb the real
+    * first. Window fingerprints only ever act as GROUPING keys, so no hash
+    * value reaches the output: every token is hashed ONCE with xxhash64 per
+    * row, then each window is the 128-bit fp128 struct over its token-hash
+    * slice — no per-window string build, and collision-safe at corpus scale
+    * (a collision here deletes text or mislabels a window as seen
+    * elsewhere — see fp128). Tokens are whitespace-split, so grouping by
+    * the token-hash slice is grouping by the window's token list.
+    * Documents shorter than one window get NULL `dj_fps` (no rows when
+    * exploded). The guard is a CASE in the same projection, not a filter
+    * below it, because the optimizer does not promise to apply that filter
+    * before every predicate it derives from the projection — and Spark's
+    * sequence(1, 0) would DESCEND ([1, 0]) into an invalid slice start.
     */
-  /** Shared window-fingerprint machinery for the exact-substring family:
-    * (tokenized docs with token counts, flagged non-first window starts).
-    * See [[duplicatedSpans]] for semantics and scale shape.
-    */
-  private def spanFlags(
+  private def spanWindows(
       df: DataFrame,
       textCol: String,
       idCol: String,
-      l: Int,
-      md5Flavor: Boolean): (DataFrame, DataFrame) = {
-    // NULL ids are dropped (the Corpus-ops policy): a NULL id has no stable
-    // identity to anchor the (id, pos) first-occurrence order — min(struct)
-    // would otherwise let a null-id occurrence absorb the real first
+      l: Int): (DataFrame, DataFrame) = {
     val toksDf = spread(df
       .where(col(textCol).isNotNull && col(idCol).isNotNull)
       .select(col(idCol), col(textCol)))
       .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("dj_toks"))
       .select(col(idCol), col("dj_toks"), size(col("dj_toks")).cast("long").as("dj_n"))
-    // Window fingerprints only ever act as GROUPING keys (first-occurrence
-    // agg + join-back); no hash value reaches the output, so any
-    // collision-resistant hash yields the same result. Default (fast)
-    // flavor: hash every token ONCE with xxhash64 per row, then
-    // fingerprint each window as the 128-bit fp128 struct over its 64-bit
-    // token-hash slice — no per-window string build, no cryptographic
-    // digest (md5 measured 13× slower than xxhash64, same as
-    // Dsir/bootstrapMeanCI), and collision-safe at corpus scale (these
-    // flags DELETE text — see fp128).
-    // Tokens are whitespace-split, so the two flavors group identically:
-    // a space-joined window string determines its token list and thus its
-    // token-hash slice. `md5Flavor = true` keeps the md5-of-joined-window
-    // spelling (cross-engine recomputable in plain SQL).
-    // sequence() is guarded by the n >= l filter — Spark's sequence(1, 0)
-    // would DESCEND ([1, 0]), not return empty.
-    val winArr: Column =
-      if (md5Flavor)
-        graft.ops.Hof.bound(col("dj_toks")) { t =>
-          transform(
-            sequence(lit(1), (size(t) - l + 1).cast("int")),
-            i => struct(
-              i.as("dj_pos"),
-              md5(concat_ws(" ", slice(t, i, lit(l))).cast("binary")).as("dj_fp")))
-        }
-      else
-        graft.ops.Hof.bound(transform(col("dj_toks"), tk => xxhash64(tk))) { hs =>
+    val fps = toksDf.select(
+      col(idCol),
+      when(col("dj_n") >= l,
+        Hof.bound(transform(col("dj_toks"), tk => xxhash64(tk))) { hs =>
           transform(
             sequence(lit(1), (size(hs) - l + 1).cast("int")),
-            i => struct(
-              i.as("dj_pos"),
-              fp128(slice(hs, i, lit(l))).as("dj_fp")))
-        }
-    val wins = toksDf
-      .where(col("dj_n") >= l)
-      .select(col(idCol), explode(winArr).as("dj_w"))
-      .select(col(idCol), col("dj_w.dj_pos"), col("dj_w.dj_fp"))
+            i => fp128(slice(hs, i, lit(l))))
+        }).as("dj_fps"))
+    (toksDf, fps)
+  }
+
+  /** Span coverage of the exact-substring family, computed once for
+    * [[duplicatedSpans]] and [[removeDuplicatedSpans]]: the tokenized
+    * documents `(idCol, dj_toks, dj_n)` plus `dj_runs`, each document's
+    * UNCOVERED token runs as (1-based `start`, `len`) structs in order.
+    *
+    * A window start is flagged when it is not the corpus-wide first
+    * occurrence of its fingerprint (ordered by (id, position)); a flag at f
+    * covers tokens [f, f + l). With a document's flagged starts sorted into
+    * F, the tokens left uncovered between consecutive flags a < b are
+    * [a + l, b), so zipping (1 - l, F…) against (F…, n + 1) yields every run
+    * — overlapping or adjacent flags give runs of length ≤ 0, which are
+    * dropped. Ids must be distinct: the (id, pos) first-occurrence order
+    * assumes it.
+    */
+  private def spanRuns(
+      df: DataFrame,
+      textCol: String,
+      idCol: String,
+      l: Int): DataFrame = {
+    val (toksDf, fps) = spanWindows(df, textCol, idCol, l)
+    val wins = fps
+      .select(col(idCol), posexplode(col("dj_fps")).as(Seq("dj_pos0", "dj_fp")))
+      .select(col(idCol), (col("dj_pos0") + 1).as("dj_pos"), col("dj_fp"))
     // read twice (first-occurrence aggregate AND the flagged join) — the
     // per-token fingerprint explode must run once, not per branch.
     // Registry-tracked checkpoint, NOT cache: MaxDupSpanFraction evaluates
@@ -1392,51 +1369,67 @@ object Dedup {
     val firsts = winsCk
       .groupBy("dj_fp")
       .agg(min(struct(col(idCol), col("dj_pos"))).as("dj_first"))
-    val flagged = winsCk
+    val flagStarts = winsCk
       .join(firsts, Seq("dj_fp"))
       .where(struct(col(idCol), col("dj_pos")) =!= col("dj_first"))
-      .select(col(idCol), col("dj_pos"))
-    (toksDf, flagged)
+      .groupBy(idCol)
+      .agg(array_sort(collect_list(col("dj_pos"))).as("dj_flags"))
+    val f = coalesce(col("dj_flags"), typedLit(Seq.empty[Int]))
+    toksDf
+      .join(flagStarts, Seq(idCol), "left")
+      .select(
+        col(idCol),
+        col("dj_toks"),
+        col("dj_n"),
+        filter(
+          zip_with(
+            concat(array(lit(1 - l)), f),
+            concat(f, array((col("dj_n") + 1).cast("int"))),
+            (a, b) => struct((a + l).as("start"), (b - a - l).as("len"))),
+          r => r.getField("len") > 0).as("dj_runs"))
   }
 
+  /** Exact-substring duplication stats per document (the window-fingerprint
+    * approximation of suffix-array exact-substring dedup — Lee et al. 2022,
+    * "Deduplicating Training Data Makes Language Models Better", public
+    * arXiv:2107.06499): every `windowTokens`-token window of the normalized
+    * token stream is fingerprinted; a window occurrence that is not the
+    * corpus-wide FIRST occurrence of its fingerprint (ordered by (id,
+    * position)) marks its token span as duplicated. Returns one row per
+    * non-null-id, non-null-text document: (`idCol`, `n_tokens`,
+    * `dup_tokens` = size of the union of flagged spans, `dup_frac` =
+    * dup_tokens / n_tokens) — the signal pipelines threshold to drop or
+    * trim bulk-copied text that document-level near-dup passes miss (long
+    * quotes, syndicated boilerplate inside otherwise-unique pages). Ids
+    * must be distinct.
+    *
+    * Scale shape: windows are one fingerprint array per document, exploded
+    * once (one row per token, same order as any shingling pass);
+    * first-occurrence is the skew-safe partial-aggregated
+    * `groupBy(fp).agg(min(struct(id, pos)))` — map-side combine absorbs a
+    * boilerplate window repeated across half the corpus BEFORE the shuffle
+    * (never a window-function over fingerprint, which funnels every copy
+    * through one reducer). Each document's flagged starts collect into one
+    * sorted array (one row per document with a flag), joined back to the
+    * documents once by id; coverage is then array arithmetic in one
+    * projection (see `spanRuns`) — no window, no per-token rows, no global
+    * ordering. Four shuffles total (fingerprint agg, fingerprint join, flag
+    * collect, id join).
+    */
   def duplicatedSpans(
       df: DataFrame,
       textCol: String,
       idCol: String,
-      windowTokens: Int = 8,
-      md5Flavor: Boolean = false): DataFrame = {
+      windowTokens: Int = 8): DataFrame = {
     require(windowTokens > 0, s"windowTokens must be positive: $windowTokens")
-    val l = windowTokens
-    import org.apache.spark.sql.expressions.Window
-    val (toksDf, flagged) = spanFlags(df, textCol, idCol, l, md5Flavor)
-    // classic interval-union sweep: each flagged window covers tokens
-    // [pos, pos+l); its NEW coverage is what extends past the running max
-    // end of strictly-earlier flagged windows. Positions are unique within
-    // a document (the firsts join is many-to-one), so the ROWS frame is
-    // deterministic.
-    val sweepW = Window.partitionBy(col(idCol)).orderBy(col("dj_pos"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val dupAgg = flagged
-      .withColumn("dj_prev_end", max(col("dj_pos") + l).over(sweepW))
+    spanRuns(df, textCol, idCol, windowTokens)
       .select(
         col(idCol),
-        greatest(
-          lit(0L),
-          col("dj_pos") + l -
-            greatest(col("dj_pos"), coalesce(col("dj_prev_end"), col("dj_pos")))
-        ).as("dj_cov"))
-      .groupBy(idCol)
-      .agg(sum(col("dj_cov")).as("dup_tokens"))
-    toksDf
-      .select(col(idCol), col("dj_n").as("n_tokens"))
-      .join(dupAgg, Seq(idCol), "left")
-      .select(
-        col(idCol),
-        col("n_tokens"),
-        coalesce(col("dup_tokens"), lit(0L)).as("dup_tokens"),
-        round(
-          coalesce(col("dup_tokens"), lit(0L)) / greatest(col("n_tokens"), lit(1L)),
-          6).as("dup_frac"))
+        col("dj_n").as("n_tokens"),
+        (col("dj_n") - aggregate(col("dj_runs"), lit(0L), (acc, r) => acc + r.getField("len")))
+          .as("dup_tokens"))
+      .withColumn("dup_frac",
+        round(col("dup_tokens") / greatest(col("n_tokens"), lit(1L)), 6))
   }
 
   /** Per-document n-gram novelty: the fraction of a document's DISTINCT
@@ -1459,37 +1452,11 @@ object Dedup {
       df: DataFrame,
       textCol: String,
       idCol: String,
-      windowTokens: Int = 8,
-      md5Flavor: Boolean = false): DataFrame = {
+      windowTokens: Int = 8): DataFrame = {
     require(windowTokens > 0, s"windowTokens must be positive: $windowTokens")
-    val l = windowTokens
-    val toksDf = spread(df
-      .where(col(textCol).isNotNull && col(idCol).isNotNull)
-      .select(col(idCol), col(textCol)))
-      .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("dj_toks"))
-      .select(col(idCol), size(col("dj_toks")).cast("long").as("dj_n"), col("dj_toks"))
-    // hash-flavor contract identical to [[duplicatedSpans]]: fingerprints
-    // are grouping keys only, fast flavor = the 128-bit fp128 struct over
-    // the per-row token-hash slice (collision-safe at corpus scale — a
-    // collision here MISLABELS a window as seen-elsewhere), md5 flavor =
-    // md5 of the space-joined window
-    val fpArr: Column =
-      if (md5Flavor)
-        graft.ops.Hof.bound(col("dj_toks")) { t =>
-          transform(
-            sequence(lit(1), (size(t) - l + 1).cast("int")),
-            i => md5(concat_ws(" ", slice(t, i, lit(l))).cast("binary")))
-        }
-      else
-        graft.ops.Hof.bound(transform(col("dj_toks"), tk => xxhash64(tk))) { hs =>
-          transform(
-            sequence(lit(1), (size(hs) - l + 1).cast("int")),
-            i => fp128(slice(hs, i, lit(l))))
-        }
-    val fps = toksDf
-      .where(col("dj_n") >= l)
-      .select(col(idCol), explode(array_distinct(fpArr)).as("dj_fp"))
-    val fpsCk = graft.core.Blocks.checkpoint(fps)
+    val (toksDf, fps) = spanWindows(df, textCol, idCol, windowTokens)
+    val fpsCk = graft.core.Blocks.checkpoint(
+      fps.select(col(idCol), explode(array_distinct(col("dj_fps"))).as("dj_fp")))
     val docFreq = fpsCk.groupBy("dj_fp").agg(count(lit(1)).as("dj_nd"))
     val per = fpsCk
       .join(docFreq, Seq("dj_fp"))
@@ -1518,43 +1485,26 @@ object Dedup {
     * representation of the whole exact-substring family; the original raw
     * text is not reconstructable from token identity). A fully-covered
     * document drops out entirely, mirroring [[dedupParagraphs]]'
-    * fully-boilerplate contract.
+    * fully-boilerplate contract. Ids must be distinct.
     *
-    * Scale shape: everything in [[duplicatedSpans]] plus one token-stream
-    * explode and ONE per-document window (running max of flagged starts —
-    * a token is covered iff the latest flag start at-or-before it is
-    * within `windowTokens`), then the same ordered-reassembly aggregation
-    * as [[dedupParagraphs]]. No per-token-times-per-flag work, no global
-    * ordering.
+    * Scale shape: exactly the plan of [[duplicatedSpans]]; the surviving
+    * text is the uncovered runs sliced out of the token array in the same
+    * projection. No window, no per-token explode, no reassembly aggregate.
     */
   def removeDuplicatedSpans(
       df: DataFrame,
       textCol: String,
       idCol: String,
-      windowTokens: Int = 8,
-      md5Flavor: Boolean = false): DataFrame = {
+      windowTokens: Int = 8): DataFrame = {
     require(windowTokens > 0, s"windowTokens must be positive: $windowTokens")
-    val l = windowTokens
-    import org.apache.spark.sql.expressions.Window
-    val (toksDf, flagged) = spanFlags(df, textCol, idCol, l, md5Flavor)
-    val tokens = toksDf
-      .select(col(idCol), posexplode(col("dj_toks")))
-      .toDF(idCol, "dj_pos0", "dj_tok")
-      .withColumn("dj_pos", col("dj_pos0") + 1)
-      .drop("dj_pos0")
-    val w = Window.partitionBy(col(idCol)).orderBy(col("dj_pos"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tokens
-      .join(flagged.withColumn("dj_flag", lit(true)), Seq(idCol, "dj_pos"), "left")
-      .withColumn("dj_last_flag", max(when(col("dj_flag"), col("dj_pos"))).over(w))
-      .where(col("dj_last_flag").isNull || col("dj_pos") > col("dj_last_flag") + (l - 1))
-      .groupBy(idCol)
-      .agg(
+    spanRuns(df, textCol, idCol, windowTokens)
+      .where(size(col("dj_runs")) > 0)
+      .select(
+        col(idCol),
         concat_ws(
           " ",
-          transform(
-            array_sort(collect_list(struct(col("dj_pos"), col("dj_tok")))),
-            s => s.getField("dj_tok"))).as(textCol))
+          flatten(transform(col("dj_runs"),
+            r => slice(col("dj_toks"), r.getField("start"), r.getField("len"))))).as(textCol))
   }
 
   /** All strings reachable from `s` by deleting up to `depth` characters

@@ -3,6 +3,9 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.Prop.propBoolean
+import org.scalacheck.util.Pretty
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
@@ -291,66 +294,116 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(out(4L) == "one two")
   }
 
-  test("span family: xxhash64 fast flavor matches the md5 flavor bit-for-bit") {
-    // fingerprints are grouping keys only — both flavors must produce the
-    // SAME output frame on data with genuine cross-doc window collisions
-    val rnd = new scala.util.Random(7)
-    val docsList = (1L to 16L).map { id =>
-      val n = 1 + rnd.nextInt(16)
-      id -> (0 until n).map(_ => ('a' + rnd.nextInt(4)).toChar.toString).mkString(" ")
+  // Generated inputs for the exact-substring family: a 4-letter alphabet
+  // (collision-rich windows) plus tokens that normalization rewrites,
+  // window sizes from 1 up to past every document, NULL ids and texts,
+  // empty / whitespace-only / unicode-only text, exact copies of earlier
+  // documents (fully covered), self-repeats, and earlier documents' tails
+  // (a flag at the last window). Non-null ids are distinct and ascend in
+  // generation order, so "earlier" is "first occurrence".
+  private case class SpanCase(rows: Seq[(java.lang.Long, String)], l: Int, parts: Int)
+
+  private val spanTokenGen: Gen[String] = Gen.frequency(
+    12 -> Gen.oneOf("a", "b", "c", "d"),
+    1 -> Gen.oneOf("A", "b,", "é", "xé", "日本", "Straße"))
+
+  private val spanCaseGen: Gen[SpanCase] = for {
+    nDocs <- Gen.choose(0, 12)
+    // 1000 exceeds every generated document: a generated token normalizes
+    // to at most 2, so a self-repeat holds at most 56 and each tail of an
+    // earlier document adds at most 28 (364 over 12 documents)
+    l <- Gen.oneOf(1, 2, 3, 8, 1000)
+    bodies <- Gen.listOfN(nDocs, Gen.choose(0, 14).flatMap(Gen.listOfN(_, spanTokenGen)))
+    // 0 as is, 1 copy, 2 self-repeat, 3 tail of an earlier doc,
+    // 4 empty, 5 whitespace-only, 6 unicode-only, 7 NULL text
+    shapes <- Gen.listOfN(nDocs, Gen.frequency(
+      6 -> 0, 2 -> 1, 1 -> 2, 2 -> 3, 1 -> 4, 1 -> 5, 1 -> 6, 1 -> 7))
+    picks <- Gen.listOfN(nDocs, Gen.choose(0, 1000))
+    gaps <- Gen.listOfN(nDocs, Gen.choose(1L, 3L))
+    nullIds <- Gen.listOfN(nDocs, Gen.frequency(9 -> false, 1 -> true))
+    sep <- Gen.oneOf(" ", "  ", " \t ")
+    parts <- Gen.choose(1, 5)
+  } yield {
+    val texts = bodies.indices.foldLeft(Vector.empty[String]) { (acc, i) =>
+      def earlier: Option[String] = if (i == 0) None else Option(acc(picks(i) % i))
+      val body = bodies(i).mkString(sep)
+      acc :+ (shapes(i) match {
+        case 1 => earlier.getOrElse(body)
+        case 2 => s"$body$sep$body"
+        case 3 => earlier.fold(body) { e =>
+          val toks = e.split(sep).toSeq
+          (bodies(i) ++ toks.drop(math.max(0, toks.size - l - picks(i) % 3))).mkString(sep)
+        }
+        case 4 => ""
+        case 5 => " \t  "
+        case 6 => "日本語 ☃"
+        case 7 => null
+        case _ => body
+      })
     }
-    val df = docs(docsList: _*)
-    def rows(d: org.apache.spark.sql.DataFrame): Seq[String] =
-      d.collect().map(_.toString).sorted.toSeq
-    assert(rows(Dedup.duplicatedSpans(df, "text", "doc_id", windowTokens = 3)) ==
-      rows(Dedup.duplicatedSpans(df, "text", "doc_id", windowTokens = 3, md5Flavor = true)))
-    assert(rows(Dedup.removeDuplicatedSpans(df, "text", "doc_id", windowTokens = 3)) ==
-      rows(Dedup.removeDuplicatedSpans(df, "text", "doc_id", windowTokens = 3, md5Flavor = true)))
-    assert(rows(Dedup.ngramNovelty(df, "text", "doc_id", windowTokens = 3)) ==
-      rows(Dedup.ngramNovelty(df, "text", "doc_id", windowTokens = 3, md5Flavor = true)))
-    val paraDf = docs(docsList.map { case (id, t) => id -> t.replace(" ", "\n") }: _*)
-    assert(rows(Dedup.dedupParagraphs(paraDf, "text", "doc_id")) ==
-      rows(Dedup.dedupParagraphs(paraDf, "text", "doc_id", md5Flavor = true)))
-    assert(rows(Dedup.removeBoilerplate(paraDf, "text", "doc_id")) ==
-      rows(Dedup.removeBoilerplate(paraDf, "text", "doc_id", md5Flavor = true)))
+    val ids = gaps.scanLeft(-5L)(_ + _).tail
+    SpanCase(
+      texts.indices.map { i =>
+        (if (nullIds(i)) null else java.lang.Long.valueOf(ids(i)), texts(i))
+      },
+      l, parts)
   }
 
   test("duplicatedSpans / removeDuplicatedSpans: randomized parity vs brute force") {
-    val L = 3
-    (1 to 4).foreach { seed =>
-      val rnd = new scala.util.Random(seed)
-      // small alphabet forces plenty of genuine cross-doc window collisions
-      val docsList = (1L to 12L).map { id =>
-        val n = 1 + rnd.nextInt(12)
-        id -> (0 until n).map(_ => ('a' + rnd.nextInt(4)).toChar.toString).mkString(" ")
+    val prop = Prop.forAllNoShrink(spanCaseGen) { c =>
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(c.rows.map { case (id, t) => Row(id, t) }, 2),
+        StructType(Seq(
+          StructField("doc_id", LongType),
+          StructField("text", StringType)))).repartition(c.parts)
+      val l = c.l
+      // reference: tokens through the operators' own tokenizer, windows
+      // grouped by their raw token lists, first occurrence = min (id, pos)
+      val toks: Map[Long, Vector[String]] = df
+        .where(col("doc_id").isNotNull && col("text").isNotNull)
+        .select(col("doc_id"), TextAnalysis.tokens(col("text")))
+        .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toVector).toMap
+      val wins = toks.toSeq.flatMap { case (id, t) =>
+        (0 to t.size - l).map(i => ((id, i + 1), t.slice(i, i + l)))
       }
-      val winsRef = docsList.flatMap { case (id, text) =>
-        val toks = text.split(" ")
-        (0 to toks.length - L).map(i => ((id, i + 1), toks.slice(i, i + L).mkString(" ")))
+      val first = wins.groupBy(_._2).map { case (w, occ) => w -> occ.map(_._1).min }
+      val covered = wins.collect { case (key @ (id, p), w) if first(w) != key => (id, p) }
+        .groupBy(_._1).map { case (id, ps) => id -> ps.flatMap(p => p._2 until p._2 + l).toSet }
+        .withDefaultValue(Set.empty[Int])
+      def round6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      val wantStats = toks.map { case (id, t) =>
+        val dup = covered(id).size
+        (id, t.size.toLong, dup.toLong, round6(dup.toDouble / math.max(t.size, 1)))
+      }.toSeq.sorted
+      val wantText = toks.toSeq.flatMap { case (id, t) =>
+        val kept = t.zipWithIndex.collect { case (tk, i) if !covered(id)(i + 1) => tk }
+        if (kept.isEmpty) None else Some(id -> kept.mkString(" "))
+      }.sorted
+      val distinctWins = toks.map { case (id, t) => id -> t.sliding(l).filter(_.size == l).toSet }
+      val docFreq = distinctWins.values.toSeq.flatten.groupBy(identity).map { case (w, o) => w -> o.size }
+      val wantNovelty = toks.keys.toSeq.sorted.map { id =>
+        val ws = distinctWins(id)
+        val novel = ws.count(docFreq(_) == 1)
+        (id, ws.size.toLong, novel.toLong,
+          if (ws.isEmpty) None else Some(round6(novel.toDouble / ws.size)))
       }
-      val firstRef = winsRef.groupBy(_._2).map { case (g, occ) => g -> occ.map(_._1).min }
-      val flaggedRef = winsRef.filter { case (key, g) => firstRef(g) != key }.map(_._1)
-      def coveredOf(id: Long): Set[Int] =
-        flaggedRef.filter(_._1 == id).flatMap { case (_, p) => p until p + L }.toSet
-
-      val df = docs(docsList: _*)
-      val gotStats = Dedup.duplicatedSpans(df, "text", "doc_id", windowTokens = L)
-        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      val gotText = Dedup.removeDuplicatedSpans(df, "text", "doc_id", windowTokens = L)
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      docsList.foreach { case (id, text) =>
-        val toks = text.split(" ")
-        val covered = coveredOf(id)
-        assert(gotStats(id) == ((toks.length.toLong, covered.size.toLong)),
-          s"seed=$seed doc=$id stats mismatch: got ${gotStats(id)}, " +
-            s"expected (${toks.length}, ${covered.size})")
-        val kept = toks.zipWithIndex.collect { case (t, i) if !covered(i + 1) => t }
-        if (kept.isEmpty)
-          assert(!gotText.contains(id), s"seed=$seed doc=$id should have dropped")
-        else
-          assert(gotText(id) == kept.mkString(" "), s"seed=$seed doc=$id text mismatch")
+      val (gotStats, gotText, gotNovelty) = graft.core.Blocks.scoped {
+        (Dedup.duplicatedSpans(df, "text", "doc_id", windowTokens = l).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq.sorted,
+        Dedup.removeDuplicatedSpans(df, "text", "doc_id", windowTokens = l).collect()
+          .map(r => r.getLong(0) -> r.getString(1)).toSeq.sorted,
+        Dedup.ngramNovelty(df, "text", "doc_id", windowTokens = l).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            if (r.isNullAt(3)) None else Some(r.getDouble(3)))).toSeq.sortBy(_._1))
       }
+      Prop.all(
+        (gotStats == wantStats) :| s"duplicatedSpans got=$gotStats want=$wantStats",
+        (gotText == wantText) :| s"removeDuplicatedSpans got=$gotText want=$wantText",
+        (gotNovelty == wantNovelty) :| s"ngramNovelty got=$gotNovelty want=$wantNovelty"
+      ) :| s"case $c"
     }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(100), prop)
+    assert(res.passed, Pretty.pretty(res))
   }
 
   test("PII scan: counts and redaction with typed placeholders") {

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,6 +16,9 @@ import graft.ops.{Similarity, Stats}
   */
 class PlanSpec extends AnyFunSuite {
   import TestSpark._
+
+  /** Plan traversal that descends into adaptive (AQE) plans. */
+  private object AdaptivePlan extends AdaptiveSparkPlanHelper
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -344,7 +350,7 @@ class PlanSpec extends AnyFunSuite {
       s"fingerprint window crept into paragraph dedup:\n$physical")
   }
 
-  test("span dedup first-occurrence partial-aggregates; sweep window is doc-partitioned") {
+  test("span dedup first-occurrence partial-aggregates; coverage plans no window") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val qe = graft.ops.Dedup
       .duplicatedSpans(docs, "text", "doc_id")
@@ -357,9 +363,26 @@ class PlanSpec extends AnyFunSuite {
       s"first-occurrence must partial-aggregate before the shuffle:\n$physical")
     assert(!physical.contains("windowspecdefinition(dj_fp"),
       s"fingerprint window crept into span dedup:\n$physical")
-    // the interval-union sweep partitions by document id, never globally
-    assert(physical.contains("windowspecdefinition(doc_id"),
-      s"span sweep must be a doc-partitioned window:\n$physical")
+    // coverage is array arithmetic over each document's sorted flag starts
+    assert(AdaptivePlan.collect(qe.executedPlan) { case w: WindowExec => w }.isEmpty,
+      s"span coverage planned a window:\n$physical")
+  }
+
+  test("span removal plans no window and no explode of the token array") {
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val plan = graft.ops.Dedup
+      .removeDuplicatedSpans(docs, "text", "doc_id")
+      .queryExecution.executedPlan
+    assert(AdaptivePlan.collect(plan) { case w: WindowExec => w }.isEmpty,
+      s"span removal planned a window:\n$plan")
+    // survivors are sliced out of the token array, never one row per token
+    val tokenExplodes = AdaptivePlan.collect(plan) {
+      case g: GenerateExec if g.generator.children.exists {
+        case a: AttributeReference => a.name == "dj_toks"
+        case _ => false
+      } => g
+    }
+    assert(tokenExplodes.isEmpty, s"span removal explodes the token array:\n$plan")
   }
 
   test("semantic near-dup candidates come from capped clusters, no raw self-join") {

@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Local approximation of the driver's correctness gate: run Verify output
 against DuckDB oracles and compare (column-name-sorted, row-sorted, hashed).
-Usage: check_oracle.py <outDir> <sfDir>
+Usage: check_oracle.py <outDir> <sfDir> [gate,gate,...]
+The optional third argument names the gates to check, as Verify's does;
+without it every gate in oracle_sql.json is checked.
 """
 import sys, os, json, glob
 import duckdb
@@ -15,6 +17,12 @@ for p in glob.glob(f"{sfdir}/*.parquet"):
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+if len(sys.argv) > 3:
+    only = set(sys.argv[3].split(","))
+    unknown = sorted(only - oracle.keys())
+    if unknown:
+        sys.exit(f"no oracle SQL for: {unknown}")
+    oracle = {k: v for k, v in oracle.items() if k in only}
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
