@@ -1,10 +1,15 @@
 package graft.constraints
 
-import scala.collection.concurrent.TrieMap
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.util.Try
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
-import graft.core.{DataRef, PlanCapture, TestResult}
+import graft.core.{Condition, DataRef, DataSource, PlanCapture, TestResult}
+import graft.ops.Ops
+import graft.ops.Ops.Aggregate
 
 /** A tolerance that may be derived at test time (e.g. from date-range growth
   * between two sources) — reference `_ToleranceGetter`
@@ -18,9 +23,15 @@ object types {
   *
   * A constraint compares a *factual* value retrieved from `ref` against a
   * *target*: either a literal (`refValue`, "within" constraints) or the same
-  * retrieval run on `ref2` ("between" constraints). Retrieval results are
-  * memoized per SparkSession (the reference's per-instance `lru_cache`,
-  * `base.py:160-171`) so repeated `test` calls don't re-trigger Spark jobs.
+  * retrieval run on `ref2` ("between" constraints).
+  *
+  * Retrievals go through a [[RetrievalScope]]: the scope of the requirement
+  * being evaluated (`Requirement.test`, `Runner.collectDataTests`), or else
+  * a scope of one that the constraint keeps across calls (the reference's
+  * per-instance `lru_cache`, `base.py:160-171`). Either way a repeated
+  * `test` re-triggers no Spark job, and within a requirement each distinct
+  * retrieval runs once: the scalar aggregates over one (source, condition)
+  * as one aggregation, and identical grouped or set retrievals once.
   */
 abstract class Constraint {
   def ref: DataRef
@@ -30,24 +41,62 @@ abstract class Constraint {
     * `lru_cache(self._cache_size)`): `None` caches indefinitely; `Some(0)`
     * disables caching so every `test` re-retrieves — the memory valve for
     * many memory-intensive constraints tested in sequence
-    * (`test_integration.py:1082-1168`).
+    * (`test_integration.py:1082-1168`). Such a constraint bypasses the
+    * scope: it neither reads nor joins a shared retrieval.
     */
   def cacheSize: Option[Int] = None
 
-  protected final def cachingDisabled: Boolean = cacheSize.contains(0)
+  protected[constraints] final def cachingDisabled: Boolean = cacheSize.contains(0)
 
-  // retrieval memo for constraints that override `test` directly (the
-  // ValueConstraint memo below covers the factual/target shape; a
-  // multi-retrieval constraint like Uniqueness keys each retrieval by
-  // name) — same semantics as the reference's per-instance lru_cache:
-  // keyed per SparkSession, bypassed entirely at cacheSize = 0
-  private val customMemo = TrieMap.empty[(Int, String), Any]
+  @transient private lazy val ownScope = new RetrievalScope(() => Seq(this))
 
+  private def scope: RetrievalScope = RetrievalScope.active.getOrElse(ownScope)
+
+  /** The scalar aggregates this constraint reads, each under a slot; the
+    * scope batches them with every other member's over the same
+    * (source, condition). */
+  private[constraints] def aggregates: Seq[(Any, Aggregate[_])] = Nil
+
+  /** The value of one of this constraint's `aggregates`. */
+  protected final def aggregated[T](spark: SparkSession, slot: Any, agg: Aggregate[T]): T =
+    replayed(aggregatedWithPlans(spark, slot, agg))
+
+  private[constraints] final def aggregatedWithPlans[T](
+      spark: SparkSession,
+      slot: Any,
+      agg: Aggregate[T]): (T, RetrievalScope.Captured) =
+    if (cachingDisabled) PlanCapture.capturing(agg.run(spark))
+    else scope.aggregate(spark, this, slot, agg).asInstanceOf[(T, RetrievalScope.Captured)]
+
+  /** A retrieval shared by every constraint of the scope that makes the same
+    * call: `key` names the operator and every argument that changes its
+    * result (never a tolerance or a name). */
+  protected final def shared[T](spark: SparkSession, key: Any)(run: => T): T =
+    replayed(sharedWithPlans(spark, key)(run))
+
+  private[constraints] final def sharedWithPlans[T](spark: SparkSession, key: Any)(
+      run: => T): (T, RetrievalScope.Captured) =
+    if (cachingDisabled) PlanCapture.capturing(run)
+    else scope.cell(spark, key)(run).asInstanceOf[(T, RetrievalScope.Captured)]
+
+  /** A retrieval of this constraint alone (a multi-retrieval constraint like
+    * Uniqueness names each one). */
   protected final def memoized[T](spark: SparkSession, key: String)(run: => T): T =
-    if (cachingDisabled) run
-    else customMemo
-      .getOrElseUpdate((System.identityHashCode(spark), key), run)
-      .asInstanceOf[T]
+    shared(spark, (this, key))(run)
+
+  /** `Ops.getUniques` under the driver-memory cap `Uniques.collectCap`: the
+    * retrieval of the client-side uniques family, `VarCharRegex` and
+    * `CategoricalBound`, shared by all of them over one reference. A result
+    * of more than `cap` groups means overflow. */
+  protected final def cappedUniques(spark: SparkSession, r: DataRef): Map[Seq[Any], Long] = {
+    val limit = Uniques.collectCap(spark) + 1
+    shared(spark, ("uniques", r, limit))(Ops.getUniques(spark, r, Some(limit)))
+  }
+
+  private def replayed[T](res: (T, RetrievalScope.Captured)): T = {
+    PlanCapture.replay(res._2)
+    res._1
+  }
 
   def name: String = nameOverride.getOrElse(getClass.getSimpleName.stripSuffix("$"))
 
@@ -101,9 +150,101 @@ abstract class Constraint {
   def test(spark: SparkSession): TestResult
 }
 
+/** The retrieval memo of one requirement, or of one constraint tested on its
+  * own. Per session, it holds driver-side values only (never a DataFrame,
+  * so `Blocks.scoped` release is unaffected), each with the plans of the
+  * retrieval that produced it, and every read hands those plans to the
+  * reader's capture: a failing result carries the plans of the retrieval it
+  * read, memoized or not. Two rules make each distinct retrieval run once:
+  *
+  *  - the scalar aggregates of the members over one (source, condition) run
+  *    as one `Ops.Aggregate.run`, which the first read of any of them
+  *    triggers and which fills every member's value; a member whose
+  *    aggregate cannot be built is left out, and when the batch fails (a
+  *    missing column, an overflow) every member runs alone, so an error
+  *    fails only the constraint that has it;
+  *  - a keyed retrieval (`Constraint.shared`) runs once per key.
+  *
+  * Each cell is computed at most once, even when two thunks race for it; a
+  * retrieval that throws leaves its cell empty. Nothing outlives the scope:
+  * a freshly declared requirement re-retrieves.
+  */
+final class RetrievalScope private[graft] (members: () => Seq[Constraint]) {
+  import RetrievalScope._
+
+  private val sessions = new ConcurrentHashMap[SparkSession, ConcurrentHashMap[Any, Cell]]
+
+  /** Test `c` with its retrievals going through this scope. */
+  private[graft] def evaluate(c: Constraint, spark: SparkSession): TestResult = {
+    val outer = current.get
+    current.set(Some(this))
+    try c.test(spark)
+    finally current.set(outer)
+  }
+
+  private[constraints] def cell(spark: SparkSession, key: Any)(run: => Any): (Any, Captured) =
+    sessions
+      .computeIfAbsent(spark, _ => new ConcurrentHashMap[Any, Cell])
+      .computeIfAbsent(key, _ => new Cell(() => run))
+      .get
+
+  /** The value of `owner`'s aggregate in `slot`, from its group's one
+    * aggregation. An aggregate the group lacks (its owner joined the
+    * requirement after the group ran, or the group's aggregation failed)
+    * runs alone. */
+  private[constraints] def aggregate(
+      spark: SparkSession,
+      owner: Constraint,
+      slot: Any,
+      agg: Aggregate[_]): (Any, Captured) = {
+    val group = Group(agg.ref.source, agg.ref.condition)
+    val (values, plans) = cell(spark, group) {
+      val declared: Seq[((Constraint, Any), Aggregate[_])] =
+        members().filterNot(_.cachingDisabled).flatMap(c =>
+          Try(c.aggregates).getOrElse(Nil).map { case (s, a) => ((c, s), a) })
+      val batch = (declared :+ (((owner, slot), agg)))
+        .filter { case (_, a) => Group(a.ref.source, a.ref.condition) == group }
+        .distinctBy(_._1)
+      try batch.map(_._1).zip(Aggregate.run(spark, batch.map(_._2))).toMap
+      catch { case NonFatal(_) if batch.sizeIs > 1 => Map.empty[Any, Any] }
+    }
+    values.asInstanceOf[Map[Any, Any]].get((owner, slot)) match {
+      case Some(v) => (v, plans)
+      case None    => cell(spark, (owner, slot))(agg.run(spark))
+    }
+  }
+}
+
+object RetrievalScope {
+  private[constraints] type Captured = Seq[org.apache.spark.sql.execution.QueryExecution]
+
+  private val current = new ThreadLocal[Option[RetrievalScope]] {
+    override def initialValue(): Option[RetrievalScope] = None
+  }
+
+  private[constraints] def active: Option[RetrievalScope] = current.get
+
+  private final case class Group(source: DataSource, condition: Option[Condition])
+
+  /** One memoized retrieval: computed by its first reader, under a capture
+    * of its own, then read by everyone. */
+  private final class Cell(private var run: () => Any) {
+    private var value: (Any, Captured) = _
+    def get: (Any, Captured) = synchronized {
+      if (value == null) {
+        value = PlanCapture.capturing(run())
+        run = null
+      }
+      value
+    }
+  }
+}
+
 /** Common case: factual and target share a type; target is a literal or the
   * same retrieval against `ref2`. Exactly one of `ref2` / `refValue` must be
-  * given (reference `base.py:174-190`).
+  * given (reference `base.py:174-190`). The retrievals go through the scope:
+  * an `AggregateConstraint`'s batched with the requirement's other scalar
+  * aggregates, any other one memoized per constraint and side.
   */
 abstract class ValueConstraint[A] extends Constraint {
   def ref2: Option[DataRef]
@@ -115,27 +256,34 @@ abstract class ValueConstraint[A] extends Constraint {
     ref2.isDefined != refValue.isDefined,
     s"Exactly one of ref2 and refValue must be given for $name (ref2=$ref2, refValue=$refValue)")
 
-  private type Captured = Seq[org.apache.spark.sql.execution.QueryExecution]
-
-  // memoizes the retrieved value together with the (lazy) query executions
-  // of the selections the retrieval touched, so a later failing test() can
-  // still render the plans; rendering happens only on failure
-  private val memo = TrieMap.empty[(Int, Boolean), (A, Captured)]
-
   protected def retrieve(spark: SparkSession, r: DataRef): A
 
-  private def retrieveMemo(spark: SparkSession, isFactual: Boolean): (A, Captured) = {
+  /** The retrieval over `r` as one scalar aggregate, when it is one. */
+  private[constraints] def aggregateOf(r: DataRef): Option[Aggregate[A]] = None
+
+  override private[constraints] def aggregates: Seq[(Any, Aggregate[_])] =
+    (Seq(true -> ref) ++ ref2.map(false -> _)).flatMap { case (side, r) =>
+      aggregateOf(r).map(side -> _)
+    }
+
+  private def retrieval(spark: SparkSession, isFactual: Boolean): (A, RetrievalScope.Captured) = {
     val r = if (isFactual) ref else ref2.get
-    def run = PlanCapture.capturing(retrieve(spark, r))
-    if (cachingDisabled) run
-    else memo.getOrElseUpdate((System.identityHashCode(spark), isFactual), run)
+    aggregateOf(r) match {
+      case Some(agg) => aggregatedWithPlans(spark, isFactual, agg)
+      case None      => sharedWithPlans(spark, (this, isFactual))(retrieve(spark, r))
+    }
   }
 
-  protected final def factual(spark: SparkSession): A =
-    retrieveMemo(spark, isFactual = true)._1
+  private def retrieved(spark: SparkSession, isFactual: Boolean): A = {
+    val (v, plans) = retrieval(spark, isFactual)
+    PlanCapture.replay(plans)
+    v
+  }
+
+  protected final def factual(spark: SparkSession): A = retrieved(spark, isFactual = true)
 
   protected final def target(spark: SparkSession): A =
-    refValue.getOrElse(retrieveMemo(spark, isFactual = false)._1)
+    refValue.getOrElse(retrieved(spark, isFactual = false))
 
   protected final def targetPrefix: String =
     ref2.map(r => s"${r.describe}'s ").getOrElse("")
@@ -144,10 +292,10 @@ abstract class ValueConstraint[A] extends Constraint {
   protected def compare(factual: A, target: A): (Boolean, Option[String])
 
   override def test(spark: SparkSession): TestResult = {
-    val (f, fPlans) = retrieveMemo(spark, isFactual = true)
+    val (f, fPlans) = retrieval(spark, isFactual = true)
     val (t, tPlans) = refValue
-      .map(v => (v, Seq.empty: Captured))
-      .getOrElse(retrieveMemo(spark, isFactual = false))
+      .map(v => (v, Seq.empty: RetrievalScope.Captured))
+      .getOrElse(retrieval(spark, isFactual = false))
     val (ok, msg) = compare(f, t)
     if (ok) TestResult.success(description)
     else
@@ -157,6 +305,20 @@ abstract class ValueConstraint[A] extends Constraint {
         PlanCapture.render(fPlans),
         PlanCapture.render(tPlans))
   }
+}
+
+/** A value constraint whose retrieval is one scalar aggregate: on its own it
+  * runs as its own aggregation (the batch of one), in a requirement as part
+  * of the one aggregation over its (source, condition).
+  */
+abstract class AggregateConstraint[A] extends ValueConstraint[A] {
+  protected def aggregate(r: DataRef): Aggregate[A]
+
+  final override private[constraints] def aggregateOf(r: DataRef): Option[Aggregate[A]] =
+    Some(aggregate(r))
+
+  final override protected def retrieve(spark: SparkSession, r: DataRef): A =
+    aggregate(r).run(spark)
 }
 
 object formatting {

@@ -3,6 +3,7 @@ package graft.constraints
 import java.time.LocalDate
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{max, min}
 
 import graft.core.{DataRef, TestResult}
 import graft.ops.Ops
@@ -40,9 +41,9 @@ final case class DateMin(
     ref2: Option[DataRef] = None,
     refValue: Option[Option[LocalDate]] = None,
     override val nameOverride: Option[String] = None)
-    extends ValueConstraint[Option[LocalDate]] {
-  override protected def retrieve(spark: SparkSession, r: DataRef): Option[LocalDate] =
-    dates.toLocalDate(Ops.getMin(spark, r))
+    extends AggregateConstraint[Option[LocalDate]] {
+  override protected def aggregate(r: DataRef): Ops.Aggregate[Option[LocalDate]] =
+    Ops.scalarOf(r, min).map(dates.toLocalDate)
   override protected def compare(
       factual: Option[LocalDate],
       target: Option[LocalDate]): (Boolean, Option[String]) = (factual, target) match {
@@ -67,9 +68,9 @@ final case class DateMax(
     ref2: Option[DataRef] = None,
     refValue: Option[Option[LocalDate]] = None,
     override val nameOverride: Option[String] = None)
-    extends ValueConstraint[Option[LocalDate]] {
-  override protected def retrieve(spark: SparkSession, r: DataRef): Option[LocalDate] =
-    dates.toLocalDate(Ops.getMax(spark, r))
+    extends AggregateConstraint[Option[LocalDate]] {
+  override protected def aggregate(r: DataRef): Ops.Aggregate[Option[LocalDate]] =
+    Ops.scalarOf(r, max).map(dates.toLocalDate)
   override protected def compare(
       factual: Option[LocalDate],
       target: Option[LocalDate]): (Boolean, Option[String]) = (factual, target) match {
@@ -95,10 +96,11 @@ final case class DateBetween(
     upperBound: String,
     override val nameOverride: Option[String] = None)
     extends Constraint {
+  private def fraction = Ops.fractionBetweenOf(
+    ref, s"DATE'${dates.parseInput(lowerBound)}'", s"DATE'${dates.parseInput(upperBound)}'")
+  override private[constraints] def aggregates = Seq("fraction" -> fraction)
   override def test(spark: SparkSession): TestResult = withPlans {
-    val lo = s"DATE'${dates.parseInput(lowerBound)}'"
-    val hi = s"DATE'${dates.parseInput(upperBound)}'"
-    Ops.getFractionBetween(spark, ref, lo, hi) match {
+    aggregated(spark, "fraction", fraction) match {
       case None => TestResult.success(description)
       case Some(f) if f >= minFraction => TestResult.success(description)
       case Some(f) =>

@@ -26,13 +26,17 @@ sealed abstract class IntervalConstraint extends Constraint {
 
   protected def retrieveResult(spark: SparkSession): Intervals.IntervalResult
 
+  /** This constraint without its tolerance and name: two constraints with
+    * one key make the same `retrieveResult` call and share it. */
+  protected def retrievalKey: Any
+
   /** What the violation means, for the failure message ("overlapping date
     * ranges in ..." / "a gap in the range in ...").
     */
   protected def violationPhrase: String
 
   override def test(spark: SparkSession): TestResult = withPlans {
-    val res = retrieveResult(spark)
+    val res = shared(spark, retrievalKey)(retrieveResult(spark))
     if (res.nDistinctKeys == 0) return TestResult.success(description)
     val fraction = res.nViolationKeys.toDouble / res.nDistinctKeys
     if (fraction <= maxRelativeNViolations) TestResult.success(description)
@@ -61,6 +65,8 @@ final case class NoOverlap(
     extends IntervalConstraint {
   override protected def retrieveResult(spark: SparkSession): Intervals.IntervalResult =
     Intervals.overlapResult(spark, ref, keyColumns, startColumns, endColumns, endIncluded)
+  override protected def retrievalKey: Any =
+    copy(maxRelativeNViolations = 0, nameOverride = None)
   override protected def violationPhrase: String =
     s"overlapping $kind in ${startColumns.zip(endColumns).map { case (s, e) => s"$s and $e" }.mkString(" and ")}"
 }
@@ -87,6 +93,8 @@ final case class NoGap(
       else Intervals.numericGapCondition(legitimateGapSize)
     Intervals.gapResult(spark, ref, keyColumns, startColumn, endColumn, cond)
   }
+  override protected def retrievalKey: Any =
+    copy(maxRelativeNViolations = 0, nameOverride = None)
   override protected def violationPhrase: String =
     s"a gap in the ${if (isDate) "date range" else "range"} in $startColumn and $endColumn"
 }

@@ -120,14 +120,14 @@ final case class MaxNullFraction(
     refValue: Option[Double] = None,
     maxRelativeDeviation: Double = 0.0,
     override val nameOverride: Option[String] = None)
-    extends ValueConstraint[Double] {
+    extends AggregateConstraint[Double] {
   require(
     refValue.forall(v => v >= 0 && v <= 1),
     s"max_null_fraction was expected to lie within [0, 1] but is $refValue.")
   require(maxRelativeDeviation >= 0, "maxRelativeDeviation needs to be positive.")
 
-  override protected def retrieve(spark: SparkSession, r: DataRef): Double =
-    Ops.getMissingFraction(spark, r).getOrElse(0.0)
+  override protected def aggregate(r: DataRef): Ops.Aggregate[Double] =
+    Ops.missingFractionOf(r).map(_.getOrElse(0.0))
 
   override protected def compare(factual: Double, target: Double): (Boolean, Option[String]) = {
     val threshold = target * (1 + maxRelativeDeviation)

@@ -7,13 +7,15 @@ import graft.ops.Ops
 import types.ToleranceGetter
 
 /** Row-count constraints (reference `constraints/nrows.py:13-184`). */
-sealed abstract class NRows extends ValueConstraint[Long] {
-  override protected def retrieve(spark: SparkSession, r: DataRef): Long =
-    Ops.rowCount(spark, r)
+sealed abstract class NRows extends AggregateConstraint[Long] {
+  override protected def aggregate(r: DataRef): Ops.Aggregate[Long] = Ops.rowCountOf(r)
 }
 
-/** factual >= target; retrieval capped at the target so "are there at least N
-  * rows" never runs a full count (reference `nrows.py:37-60`).
+/** factual >= target; the retrieval is capped at the target so "are there
+  * at least N rows" never runs a full count (reference `nrows.py:37-60`).
+  * Batched with other capped counts over the same selection it is capped at
+  * the largest target, which decides each the same way; batched with any
+  * other aggregate it counts exactly: the scan is paid anyway.
   */
 final case class NRowsMin(
     ref: DataRef,
@@ -21,8 +23,8 @@ final case class NRowsMin(
     refValue: Option[Long] = None,
     override val nameOverride: Option[String] = None)
     extends NRows {
-  override protected def retrieve(spark: SparkSession, r: DataRef): Long =
-    Ops.rowCount(spark, r, rowLimit = refValue)
+  override protected def aggregate(r: DataRef): Ops.Aggregate[Long] =
+    Ops.rowCountOf(r, rowLimit = refValue)
   override protected def compare(factual: Long, target: Long): (Boolean, Option[String]) =
     (factual >= target,
       Some(s"${ref.describe} has $factual < $targetPrefix$target rows. $conditionString"))

@@ -1,6 +1,7 @@
 package graft.constraints
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{max, min}
 
 import graft.core.{DataRef, TestResult}
 import graft.ops.Ops
@@ -20,9 +21,9 @@ final case class NumericMin(
     ref2: Option[DataRef] = None,
     refValue: Option[Option[Double]] = None,
     override val nameOverride: Option[String] = None)
-    extends ValueConstraint[Option[Double]] {
-  override protected def retrieve(spark: SparkSession, r: DataRef): Option[Double] =
-    num.toD(Ops.getMin(spark, r))
+    extends AggregateConstraint[Option[Double]] {
+  override protected def aggregate(r: DataRef): Ops.Aggregate[Option[Double]] =
+    Ops.scalarOf(r, min).map(num.toD)
   override protected def compare(
       factual: Option[Double],
       target: Option[Double]): (Boolean, Option[String]) = (factual, target) match {
@@ -40,9 +41,9 @@ final case class NumericMax(
     ref2: Option[DataRef] = None,
     refValue: Option[Option[Double]] = None,
     override val nameOverride: Option[String] = None)
-    extends ValueConstraint[Option[Double]] {
-  override protected def retrieve(spark: SparkSession, r: DataRef): Option[Double] =
-    num.toD(Ops.getMax(spark, r))
+    extends AggregateConstraint[Option[Double]] {
+  override protected def aggregate(r: DataRef): Ops.Aggregate[Option[Double]] =
+    Ops.scalarOf(r, max).map(num.toD)
   override protected def compare(
       factual: Option[Double],
       target: Option[Double]): (Boolean, Option[String]) = (factual, target) match {
@@ -62,8 +63,10 @@ final case class NumericBetween(
     upperBound: Double,
     override val nameOverride: Option[String] = None)
     extends Constraint {
+  private def fraction = Ops.fractionBetweenOf(ref, lowerBound.toString, upperBound.toString)
+  override private[constraints] def aggregates = Seq("fraction" -> fraction)
   override def test(spark: SparkSession): TestResult = withPlans {
-    Ops.getFractionBetween(spark, ref, lowerBound.toString, upperBound.toString) match {
+    aggregated(spark, "fraction", fraction) match {
       case None => TestResult.success(description) // empty selection
       case Some(f) if f >= minFraction => TestResult.success(description)
       case Some(f) =>
@@ -82,11 +85,9 @@ final case class NumericMean(
     ref2: Option[DataRef] = None,
     refValue: Option[Option[Double]] = None,
     override val nameOverride: Option[String] = None)
-    extends ValueConstraint[Option[Double]] {
-  override protected def retrieve(spark: SparkSession, r: DataRef): Option[Double] = {
-    val m = Ops.getMean(spark, r)
-    if (m.isNaN) None else Some(m)
-  }
+    extends AggregateConstraint[Option[Double]] {
+  override protected def aggregate(r: DataRef): Ops.Aggregate[Option[Double]] =
+    Ops.meanOf(r).map(m => if (m.isNaN) None else Some(m))
   override protected def compare(
       factual: Option[Double],
       target: Option[Double]): (Boolean, Option[String]) = (factual, target) match {

@@ -16,6 +16,11 @@ sealed abstract class RowConstraint extends Constraint {
   def ref2Required: DataRef
   def maxMissingFractionGetter: ToleranceGetter
   override protected def ref2Option: Option[graft.core.DataRef] = Some(ref2Required)
+
+  /** Every set size and sample of the pair, shared by the equality, subset
+    * and superset constraints over it. */
+  protected final def rowSets(spark: SparkSession): Ops.RowSets =
+    shared(spark, ("rowSets", ref, ref2Required))(Ops.getRowSets(spark, ref, ref2Required))
 }
 
 /** (|T1∖T2| + |T2∖T1|) / |T1∪T2| <= tolerance (reference `row.py:38-86`). */
@@ -27,7 +32,7 @@ final case class RowEquality(
     extends RowConstraint {
   override def test(spark: SparkSession): TestResult = withPlans {
     val maxMissing = maxMissingFractionGetter(spark)
-    val sets       = Ops.getRowSets(spark, ref, ref2Required)
+    val sets       = rowSets(spark)
     if (sets.union == 0) return TestResult.success(description)
     val fraction = (sets.leftOnly + sets.rightOnly).toDouble / sets.union
     if (fraction <= maxMissing) TestResult.success(description)
@@ -50,7 +55,7 @@ final case class RowSubset(
     extends RowConstraint {
   override def test(spark: SparkSession): TestResult = withPlans {
     val maxMissing = maxMissingFractionGetter(spark)
-    val sets       = Ops.getRowSets(spark, ref, ref2Required)
+    val sets       = rowSets(spark)
     if (sets.left == 0) return TestResult.success(description)
     val fraction = sets.leftOnly.toDouble / sets.left
     if (fraction <= maxMissing) TestResult.success(description)
@@ -72,7 +77,7 @@ final case class RowSuperset(
     extends RowConstraint {
   override def test(spark: SparkSession): TestResult = withPlans {
     val maxMissing = maxMissingFractionGetter(spark)
-    val sets       = Ops.getRowSets(spark, ref, ref2Required)
+    val sets       = rowSets(spark)
     if (sets.right == 0) return TestResult.success(description)
     val fraction = sets.rightOnly.toDouble / sets.right
     if (fraction <= maxMissing) TestResult.success(description)

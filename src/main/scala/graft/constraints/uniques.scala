@@ -83,7 +83,7 @@ sealed abstract class Uniques extends Constraint {
 
   protected def retrieveUniques(spark: SparkSession, r: DataRef): (Seq[Any], Seq[Long]) = {
     val cap = Uniques.collectCap(spark)
-    val raw = Ops.getUniques(spark, r, Some(cap + 1))
+    val raw = cappedUniques(spark, r)
     if (raw.size > cap) throw new Uniques.CollectOverflow(r.describe, cap)
     val asValues: Seq[(Any, Long)] = raw.toSeq.map {
       case (Seq(single), c) => (single, c)
@@ -97,32 +97,19 @@ sealed abstract class Uniques extends Constraint {
     (values, counts)
   }
 
-  // memoized per session, unless the user disabled the cache (cacheSize=0 —
-  // reference lru_cache(0) semantics, pinned by test_integration.py:1082)
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(Int, Boolean), (Seq[Any], Seq[Long])]
-
-  // the engine path computes a whole TestResult per session; memoize it the
-  // same way so repeated test() calls don't re-run the anti-join jobs
-  private val engineMemo =
-    scala.collection.concurrent.TrieMap.empty[Int, TestResult]
-
+  // the engine path computes a whole TestResult; memoize it per constraint
+  // so repeated test() calls don't re-run the anti-join jobs (unless the
+  // user disabled the cache: cacheSize=0 — reference lru_cache(0)
+  // semantics, pinned by test_integration.py:1082)
   protected final def memoizedEngineTest(
       spark: SparkSession)(body: => TestResult): TestResult =
-    if (cachingDisabled) withPlans(body)
-    else engineMemo.getOrElseUpdate(System.identityHashCode(spark), withPlans(body))
+    memoized(spark, "engineTest")(withPlans(body))
 
   protected final def factualUniques(spark: SparkSession): (Seq[Any], Seq[Long]) =
-    if (cachingDisabled) retrieveUniques(spark, ref)
-    else memo.getOrElseUpdate(
-      (System.identityHashCode(spark), true), retrieveUniques(spark, ref))
+    retrieveUniques(spark, ref)
 
   protected final def targetUniques(spark: SparkSession): (Seq[Any], Seq[Long]) =
-    uniquesLiteral.map(u => (u, Seq.empty[Long])).getOrElse {
-      if (cachingDisabled) retrieveUniques(spark, ref2.get)
-      else memo.getOrElseUpdate(
-        (System.identityHashCode(spark), false), retrieveUniques(spark, ref2.get))
-    }
+    uniquesLiteral.map(u => (u, Seq.empty[Long])).getOrElse(retrieveUniques(spark, ref2.get))
 
   protected final def fmt(values: Iterable[Any]): String =
     formatting
@@ -673,7 +660,7 @@ final case class CategoricalBound(
     // not an OOM. The failure is returned as a VALUE (no non-local return):
     // a `return` would unwind through withPlans and skip plan attachment.
     val cap = Uniques.collectCap(spark)
-    val raw = Ops.getUniques(spark, ref, Some(cap + 1))
+    val raw = cappedUniques(spark, ref)
     if (raw.size > cap)
       TestResult.failure(
         description,

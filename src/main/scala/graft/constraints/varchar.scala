@@ -1,6 +1,7 @@
 package graft.constraints
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{length, max, min}
 
 import graft.core.{DataRef, TestResult}
 import graft.ops.Ops
@@ -62,7 +63,7 @@ final case class VarCharRegex(
     // same driver-memory cap as the Uniques client path: a high-cardinality
     // column aborts loudly instead of OOMing the collect
     val cap = Uniques.collectCap(spark)
-    val uniques: Map[Seq[Any], Long] = Ops.getUniques(spark, ref, Some(cap + 1))
+    val uniques = cappedUniques(spark, ref)
     if (uniques.size > cap)
       return TestResult.failure(
         description,
@@ -110,12 +111,9 @@ final case class VarCharMinLength(
     ref2: Option[DataRef] = None,
     refValue: Option[Option[Long]] = None,
     override val nameOverride: Option[String] = None)
-    extends ValueConstraint[Option[Long]] {
-  override protected def retrieve(spark: SparkSession, r: DataRef): Option[Long] = {
-    val v = Ops.aggregateScalar(spark, r, c => org.apache.spark.sql.functions.min(
-      org.apache.spark.sql.functions.length(c)))
-    Option(v).map(_.asInstanceOf[Number].longValue())
-  }
+    extends AggregateConstraint[Option[Long]] {
+  override protected def aggregate(r: DataRef): Ops.Aggregate[Option[Long]] =
+    Ops.scalarOf(r, c => min(length(c))).map(v => Option(v).map(_.asInstanceOf[Number].longValue()))
   override protected def compare(
       factual: Option[Long],
       target: Option[Long]): (Boolean, Option[String]) = (factual, target) match {
@@ -134,12 +132,9 @@ final case class VarCharMaxLength(
     ref2: Option[DataRef] = None,
     refValue: Option[Option[Long]] = None,
     override val nameOverride: Option[String] = None)
-    extends ValueConstraint[Option[Long]] {
-  override protected def retrieve(spark: SparkSession, r: DataRef): Option[Long] = {
-    val v = Ops.aggregateScalar(spark, r, c => org.apache.spark.sql.functions.max(
-      org.apache.spark.sql.functions.length(c)))
-    Option(v).map(_.asInstanceOf[Number].longValue())
-  }
+    extends AggregateConstraint[Option[Long]] {
+  override protected def aggregate(r: DataRef): Ops.Aggregate[Option[Long]] =
+    Ops.scalarOf(r, c => max(length(c))).map(v => Option(v).map(_.asInstanceOf[Number].longValue()))
   override protected def compare(
       factual: Option[Long],
       target: Option[Long]): (Boolean, Option[String]) = (factual, target) match {

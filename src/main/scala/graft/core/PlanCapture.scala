@@ -3,6 +3,7 @@ package graft.core
 import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 
 /** Thread-local recorder wiring retrieval plans into failing TestResults —
   * the Spark analogue of the reference attaching each retrieval's compiled
@@ -17,32 +18,29 @@ import org.apache.spark.sql.DataFrame
   */
 object PlanCapture {
 
-  private val active =
-    new ThreadLocal[List[mutable.Buffer[org.apache.spark.sql.execution.QueryExecution]]] {
-      override def initialValue(): List[mutable.Buffer[org.apache.spark.sql.execution.QueryExecution]] =
-        Nil
-    }
-
-  /** Called by `DataRef.selection` for every retrieval plan it builds.
-    * Records into EVERY active capture (captures nest: a memoizing retrieval
-    * captures for its cache entry while the surrounding `test` captures for
-    * the failure message). Only the lazy `QueryExecution` handle is stored —
-    * optimization and stringification happen on the failure path alone
-    * (`render`), so passing tests pay nothing.
-    */
-  def record(df: DataFrame): Unit = {
-    val buffers = active.get()
-    if (buffers.nonEmpty) {
-      val qe = df.queryExecution
-      buffers.foreach(_ += qe)
-    }
+  private val active = new ThreadLocal[List[mutable.Buffer[QueryExecution]]] {
+    override def initialValue(): List[mutable.Buffer[QueryExecution]] = Nil
   }
 
-  /** Run `body`, returning its result plus the query executions of every
-    * selection it retrieved (including selections inside nested captures).
+  /** Called by `DataRef.selection` for every retrieval plan it builds.
+    * Records into the innermost capture only: a memoized retrieval captures
+    * its own plans, and every read of the memo hands them to the reader's
+    * capture through `replay`. Only the lazy `QueryExecution` handle is
+    * stored — optimization and stringification happen on the failure path
+    * alone (`render`), so passing tests pay nothing.
     */
-  def capturing[T](body: => T): (T, Seq[org.apache.spark.sql.execution.QueryExecution]) = {
-    val buf = mutable.Buffer.empty[org.apache.spark.sql.execution.QueryExecution]
+  def record(df: DataFrame): Unit = replay(Seq(df.queryExecution))
+
+  /** Hand plans captured earlier (by a memoized retrieval) to the innermost
+    * active capture. */
+  def replay(qes: Seq[QueryExecution]): Unit =
+    active.get().headOption.foreach(_ ++= qes)
+
+  /** Run `body`, returning its result plus the query executions of every
+    * selection it retrieved or replayed.
+    */
+  def capturing[T](body: => T): (T, Seq[QueryExecution]) = {
+    val buf = mutable.Buffer.empty[QueryExecution]
     active.set(buf :: active.get())
     try {
       val result = body
@@ -51,6 +49,6 @@ object PlanCapture {
   }
 
   /** Optimized-plan strings for a failure message (deduplicated). */
-  def render(qes: Seq[org.apache.spark.sql.execution.QueryExecution]): Seq[String] =
+  def render(qes: Seq[QueryExecution]): Seq[String] =
     qes.map(_.optimizedPlan.toString.trim).distinct
 }

@@ -25,14 +25,65 @@ import graft.core.{Condition, DataRef}
   */
 object Ops {
 
-  /** count(*) with optional LIMIT cap (reference `db_access.py:740-756`;
-    * the cap is the `NRowsMin` optimization, `nrows.py:41-51`).
-    * Catalyst pushes the LocalLimit below the count.
+  /** A scalar retrieval as aggregate columns over `ref`'s condition-filtered
+    * source plus a decoder of their values. `Aggregate.run` evaluates any
+    * number of them over one (source, condition) as ONE `agg(...).head()`:
+    * one scan however many columns and statistics a specification reads
+    * there (cf. Deequ's shared analyzer scans, Schelter et al., PVLDB 2018).
+    * `rowCap` bounds the scan with a LIMIT; a batch is bounded by its
+    * largest cap when every member has one, and else counts exactly, since
+    * the scan is paid anyway.
     */
-  def rowCount(spark: SparkSession, ref: DataRef, rowLimit: Option[Long] = None): Long = {
-    val sel = ref.selection(spark)
-    rowLimit.fold(sel.count())(n => sel.limit(n.toInt).count())
+  final case class Aggregate[A](
+      ref: DataRef,
+      columns: Seq[Column],
+      decode: Row => A,
+      rowCap: Option[Long] = None) {
+    def map[B](f: A => B): Aggregate[B] = copy(decode = decode.andThen(f))
+    def run(spark: SparkSession): A = Aggregate.run(spark, Seq(this)).head.asInstanceOf[A]
   }
+
+  object Aggregate {
+
+    /** The values of `aggs`, in order, from one aggregation over their
+      * shared (source, condition), projected onto the union of their columns.
+      */
+    def run(spark: SparkSession, aggs: Seq[Aggregate[_]]): Seq[Any] = {
+      val ref = aggs.head.ref
+      require(
+        aggs.forall(a => a.ref.source == ref.source && a.ref.condition == ref.condition),
+        "A batched aggregate reads one (source, condition)")
+      val cols = aggs.flatMap(_.ref.columnsOrEmpty).distinct
+      val sel = DataRef(ref.source, if (cols.isEmpty) None else Some(cols), ref.condition)
+        .selection(spark)
+      val caps = aggs.flatMap(_.rowCap)
+      val scan = if (caps.sizeIs == aggs.size) capped(sel, caps.max) else sel
+      val all = aggs.flatMap(_.columns)
+      val row = scan.agg(all.head, all.tail: _*).head()
+      val offsets = aggs.scanLeft(0)(_ + _.columns.length)
+      aggs.zip(offsets).map { case (a, from) =>
+        a.decode(Row.fromSeq(row.toSeq.slice(from, from + a.columns.length)))
+      }
+    }
+  }
+
+  /** `sel` under a LIMIT of `n` rows when Spark can express one (0 to
+    * Int.MaxValue); a larger or negative cap leaves the scan unbounded, so
+    * a count never wraps to a negative or too-small limit.
+    */
+  private def capped(sel: DataFrame, n: Long): DataFrame =
+    if (n >= 0 && n <= Int.MaxValue) sel.limit(n.toInt) else sel
+
+  /** count(*), with an optional LIMIT cap (the `NRowsMin` optimization,
+    * reference `nrows.py:41-51`): Catalyst pushes the LocalLimit below the
+    * count.
+    */
+  def rowCountOf(ref: DataRef, rowLimit: Option[Long] = None): Aggregate[Long] =
+    Aggregate(ref, Seq(count(lit(1))), _.getLong(0), rowLimit)
+
+  /** count(*) with optional LIMIT cap (reference `db_access.py:740-756`). */
+  def rowCount(spark: SparkSession, ref: DataRef, rowLimit: Option[Long] = None): Long =
+    rowCountOf(ref, rowLimit).run(spark)
 
   /** Single-column values, client-side (reference `db_access.py:759-786`).
     * Use `limit` to bound driver memory — at scale an unbounded collect is a
@@ -44,11 +95,12 @@ object Ops {
     bounded.collect().toSeq.map(_.get(0))
   }
 
-  /** One aggregate scalar over the relevant column. */
-  def aggregateScalar(spark: SparkSession, ref: DataRef, f: Column => Column): Any = {
-    val row = ref.selection(spark).agg(f(col(ref.column))).head()
-    if (row.isNullAt(0)) null else row.get(0)
-  }
+  /** One aggregate scalar over the relevant column; NULL for an empty set. */
+  def scalarOf(ref: DataRef, f: Column => Column): Aggregate[Any] =
+    Aggregate(ref, Seq(f(col(ref.column))), r => if (r.isNullAt(0)) null else r.get(0))
+
+  def aggregateScalar(spark: SparkSession, ref: DataRef, f: Column => Column): Any =
+    scalarOf(ref, f).run(spark)
 
   def getMin(spark: SparkSession, ref: DataRef): Any =
     aggregateScalar(spark, ref, min) // db_access.py:789-794
@@ -60,10 +112,12 @@ object Ops {
     * accumulation is exact and associative — deterministic across partition
     * orders, unlike a double sum.
     */
-  def getMean(spark: SparkSession, ref: DataRef): Double = {
-    val v = aggregateScalar(spark, ref, c => avg(c.cast(DecimalType(38, 9))))
-    if (v == null) Double.NaN else v.asInstanceOf[java.math.BigDecimal].doubleValue()
-  }
+  def meanOf(ref: DataRef): Aggregate[Double] =
+    scalarOf(ref, c => avg(c.cast(DecimalType(38, 9)))).map { v =>
+      if (v == null) Double.NaN else v.asInstanceOf[java.math.BigDecimal].doubleValue()
+    }
+
+  def getMean(spark: SparkSession, ref: DataRef): Double = meanOf(ref).run(spark)
 
   def getMinLength(spark: SparkSession, ref: DataRef): Long =
     Option(aggregateScalar(spark, ref, c => min(length(c))))
@@ -120,19 +174,24 @@ object Ops {
     * (reference `db_access.py:878-903`): NULLs and out-of-range rows count in
     * the denominator only. One pass instead of the reference's two counts.
     */
+  def fractionBetweenOf(
+      ref: DataRef,
+      lowerBound: String,
+      upperBound: String): Aggregate[Option[Double]] = {
+    val c = col(ref.column)
+    val inRange = c.geq(expr(lowerBound)) && c.leq(expr(upperBound))
+    Aggregate(ref, Seq(count(lit(1)), count(when(inRange, 1))), fractionOfAll)
+  }
+
   def getFractionBetween(
       spark: SparkSession,
       ref: DataRef,
       lowerBound: String,
-      upperBound: String): Option[Double] = {
-    val c = col(ref.column)
-    val inRange = c.geq(expr(lowerBound)) && c.leq(expr(upperBound))
-    val row = ref
-      .selection(spark)
-      .agg(
-        count(lit(1)).as("n_all"),
-        count(when(inRange, 1)).as("n_in"))
-      .head()
+      upperBound: String): Option[Double] =
+    fractionBetweenOf(ref, lowerBound, upperBound).run(spark)
+
+  /** (count of all rows, count of some) → their ratio; None for no rows. */
+  private def fractionOfAll(row: Row): Option[Double] = {
     val nAll = row.getLong(0)
     if (nAll == 0L) None else Some(row.getLong(1).toDouble / nAll)
   }
@@ -234,15 +293,11 @@ object Ops {
     ref.selection(spark).union(ref2.selection(spark)).distinct().count()
 
   /** NULL fraction of the relevant column (reference `db_access.py:967-986`). */
-  def getMissingFraction(spark: SparkSession, ref: DataRef): Option[Double] = {
-    val c = col(ref.column)
-    val row = ref
-      .selection(spark)
-      .agg(count(lit(1)).as("n_all"), count(when(c.isNull, 1)).as("n_null"))
-      .head()
-    val nAll = row.getLong(0)
-    if (nAll == 0L) None else Some(row.getLong(1).toDouble / nAll)
-  }
+  def missingFractionOf(ref: DataRef): Aggregate[Option[Double]] =
+    Aggregate(ref, Seq(count(lit(1)), count(when(col(ref.column).isNull, 1))), fractionOfAll)
+
+  def getMissingFraction(spark: SparkSession, ref: DataRef): Option[Double] =
+    missingFractionOf(ref).run(spark)
 
   /** Reflected column names (reference `db_access.py:989-993`). */
   def getColumnNames(spark: SparkSession, ref: DataRef): Seq[String] =

@@ -15,14 +15,25 @@ import graft.ops.Ops
   * source ("within") or a pair ("between"), with `add*Constraint` builder
   * methods mirroring the reference's full public surface
   * (`requirements.py:63-2238`). `test(spark)` runs every constraint.
+  *
+  * A requirement owns one [[graft.constraints.RetrievalScope]]: its
+  * constraints, tested through `test` or through the thunks of
+  * `Runner.collectDataTests`, run each distinct retrieval once. The scope
+  * lives as long as the requirement; a freshly declared one re-retrieves.
   */
 sealed abstract class Requirement extends Iterable[Constraint] {
   protected val constraintsBuffer: ArrayBuffer[Constraint] = ArrayBuffer.empty
 
+  private val scope = new RetrievalScope(() => constraintsBuffer.toSeq)
+
   override def iterator: Iterator[Constraint] = constraintsBuffer.iterator
   def constraints: Seq[Constraint] = constraintsBuffer.toSeq
 
-  def test(spark: SparkSession): Seq[TestResult] = constraints.map(_.test(spark))
+  /** Test one of this requirement's constraints through its scope. */
+  private[graft] def evaluate(c: Constraint, spark: SparkSession): TestResult =
+    scope.evaluate(c, spark)
+
+  def test(spark: SparkSession): Seq[TestResult] = constraints.map(evaluate(_, spark))
 }
 
 /** Constraints over a single data source

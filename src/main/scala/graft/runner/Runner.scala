@@ -21,9 +21,15 @@ import graft.requirements.Requirement
   */
 object Runner {
 
+  /** One (test id, thunk) per constraint. A thunk tests its constraint
+    * through its requirement's retrieval scope, so the thunks of one
+    * requirement share their retrievals whatever order (or thread) they run
+    * in: the first to need a retrieval runs it, the others read it.
+    */
   def collectDataTests(
       requirements: Seq[Requirement]): Seq[(String, SparkSession => TestResult)] =
-    requirements.flatMap(_.constraints).map(c => c.description -> ((s: SparkSession) => c.test(s)))
+    requirements.flatMap(r =>
+      r.constraints.map(c => c.description -> ((s: SparkSession) => r.evaluate(c, s))))
 
   def runAll(spark: SparkSession, requirements: Seq[Requirement]): Seq[TestResult] =
     requirements.flatMap(_.test(spark))

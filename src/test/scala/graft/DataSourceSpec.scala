@@ -7,9 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.constraints.{NRowsEquality, NRowsMin}
 import graft.core.{DataRef, FileSource, ParquetSource}
 
-/** The `DataSource.df` contract: the schema is inferred once per source
-  * instance and session, files are listed on every call, and every call
-  * builds a fresh relation.
+/** The `DataSource.df` contract: the schema is fixed per source instance
+  * and session and inferred once per session and file listing, files are
+  * listed on every call, and every call builds a fresh relation.
   */
 class DataSourceSpec extends AnyFunSuite {
   import TestSpark._
@@ -25,8 +25,19 @@ class DataSourceSpec extends AnyFunSuite {
     spark.range(10).write.parquet(path)
     val src = ParquetSource(path)
     assert(countJobs((1 to 50).foreach(_ => src.df(spark))) == 1)
-    // a new instance infers again: the memo is per instance, not global
-    assert(countJobs(ParquetSource(path).df(spark)) == 1)
+    // a new instance over the same file listing reuses the schema
+    assert(countJobs(ParquetSource(path).df(spark)) == 0)
+    // an append changes the listing: a new instance infers again
+    spark.range(10, 15).write.mode("append").parquet(path)
+    val appended = ParquetSource(path)
+    assert(countJobs(appended.df(spark)) == 1)
+    assert(appended.df(spark).count() == 15)
+    // an overwrite with another schema is read with the new schema
+    spark.range(3).selectExpr("id", "cast(id AS string) AS label")
+      .write.mode("overwrite").parquet(path)
+    val rewritten = ParquetSource(path).df(spark)
+    assert(rewritten.columns.toSeq == Seq("id", "label"))
+    assert(rewritten.count() == 3)
   }
 
   test("ParquetSource: every df call is a fresh relation (self-except, self-join)") {
@@ -53,6 +64,10 @@ class DataSourceSpec extends AnyFunSuite {
     assert(df.schema.map(f => (f.name, f.dataType.simpleString)) ==
       Seq(("id", "int"), ("label", "string")))
     assert(df.count() == 9)
+    // a new instance with the same path, format and options reuses it
+    val same = FileSource(
+      csv.getAbsolutePath, "csv", Map("header" -> "true", "inferSchema" -> "true"))
+    assert(countJobs(same.df(spark)) == 0)
   }
 
   test("appended parquet part files are seen by the same source instance") {

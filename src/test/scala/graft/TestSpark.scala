@@ -45,6 +45,17 @@ object TestSpark {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Janino class compilations started by `body`, read from Spark's public
+    * codegen counter the way `countJobs` counts jobs. The counter is
+    * JVM-wide, so this reads true only while nothing else compiles.
+    */
+  def countCompiles(body: => Any): Long = {
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    body
+    compiles.getCount - before
+  }
+
   def intDf(name: String, values: Seq[Integer]): DataFrame = {
     val rows = values.map(v => Row(v))
     spark.createDataFrame(
